@@ -150,65 +150,6 @@ def main() -> None:
     tdf.unpersist()
     timings["pipeline_parse_route_aggregate"] = round(pipeline_sec, 3)
 
-    # alternate extractor passes (same outputs, proven equivalent): the
-    # headline pipeline above runs extractor="auto" → compiled-JVM for
-    # the shipped registry; these measure the registry-as-data UDF
-    # engines a custom registry would fall back to
-    # persist + materialize the input so the pass times the EXTRACT
-    # engine, not transcript synthesis (which otherwise dominates and
-    # masks the engine delta)
-    tdf2 = make_transcripts(spark, n_convs=n_convs, parts=cpus * 2)
-    tdf2.persist(StorageLevel.MEMORY_AND_DISK)
-    tdf2.count()
-
-    def _extract_agg(ex: str):
-        # a FRESH DataFrame per run: re-collecting the same object would
-        # reuse its already-materialized shuffle stages (keyed on RDD
-        # identity) and time only the final reduce (~30 ms)
-        d = build_routed(spark, tdf2, extractor=ex)
-        return d.agg(F.sum(F.length("route")), F.sum(F.when(F.col("matched"), 1)))
-
-    for ex in ("arrow", "pandas"):
-        # one untimed run per engine: plan-JIT cold start otherwise lands
-        # on whichever engine runs first and inverts the reported ranking
-        # (r02 showed arrow slower than pandas for exactly this reason);
-        # then best-of-2 timed — single trials sit inside ±10% box noise,
-        # which is the size of the engine delta being reported
-        _extract_agg(ex).collect()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _extract_agg(ex).collect()
-            best = min(best, time.perf_counter() - t0)
-        timings[f"pipeline_{ex}_extract_pass"] = round(best, 3)
-
-    # match-KERNEL micro-bench (driver-side, cached in-memory batch, no
-    # route/agg/exchange): isolates the per-row regex-engine cost the
-    # full passes above cannot resolve — the kernel is ~20 ms of a
-    # ~1.5 s distributed pass, far inside the ±10% box noise, which is
-    # why r02/r03 full-pass orderings flip-flopped. This is the number
-    # choose_extractor's arrow-before-pandas preference rests on
-    # (measured: RE2/Arrow ≈ 1.5–2× the pandas str.extract kernel).
-    from log_parser_project_spark.operators import parse as parse_mod
-
-    kernel_pdf = (
-        parse_mod.classify(tdf2.limit(60_000), "text")
-        .select("text", "pattern_class", "version")
-        .toPandas()
-    )
-    match_kernel: dict[str, float] = {"rows": len(kernel_pdf)}
-    for ex in ("pandas", "arrow"):
-        fn = parse_mod._make_extract_udf(parse_mod.PATTERNS, ex)[0].func
-        args = (kernel_pdf["text"], kernel_pdf["pattern_class"], kernel_pdf["version"])
-        fn(*args)  # warm (compile caches)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(*args)
-            best = min(best, time.perf_counter() - t0)
-        match_kernel[f"{ex}_us_per_row"] = round(best * 1e6 / len(kernel_pdf), 3)
-    tdf2.unpersist()
-
     post = _host_probe()
     clock = min(pre["clock_mops"], post["clock_mops"])
     host = {
@@ -249,7 +190,6 @@ def main() -> None:
                 "pipeline_rows": n_rows,
                 "turns_per_sec": round(n_rows / pipeline_sec, 1),
                 "cpus": cpus,
-                "match_kernel": match_kernel,
                 "host": host,
             }
         )

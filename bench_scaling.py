@@ -310,8 +310,8 @@ Generated {stamp} by `python bench_scaling.py --write-md`.
 
 **Protocol** (BASELINE.md in-sandbox evidence): identical job — read
 pre-generated transcripts parquet ({summary["rows"]:,} rows, {INPUT_FILES}
-files) → classify → registry extract (extractor="auto": compiled-JVM
-expressions for the shipped registry) → broadcast enrich →
+files) → classify → registry extract (compiled-JVM
+expressions, the engine the shipped registry picks) → broadcast enrich →
 route → 4 per-sink aggregates — run at `local[{n}]` and
 `local[{n4}]`, `spark.sql.shuffle.partitions` scaled with cores,
 fresh JVM per level-run, best of {args.runs} timed runs after an

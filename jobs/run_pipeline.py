@@ -59,13 +59,6 @@ def main() -> None:
     ap.add_argument("--convs", type=int, default=10000)
     ap.add_argument("--hot-rows", type=int, default=0)
     ap.add_argument(
-        "--extractor", choices=["auto", "pandas", "arrow", "jvm"], default="auto",
-        help="registry extraction path: 'auto' (default — the fastest engine "
-             "whose semantics match this registry: jvm for portable static "
-             "registries, else RE2-over-Arrow, else pandas), or force one of "
-             "'jvm' / 'arrow' / 'pandas' — all three proven output-identical",
-    )
-    ap.add_argument(
         "--registry", default=None,
         help="registry JSON (regex- or grok-authored patterns) — the whole "
              "pipeline adapts: classify prefixes, extraction, enums, sinks, "
@@ -181,8 +174,7 @@ def main() -> None:
 
     if args.checkpointed:
         cp = CheckpointedPipeline(
-            spark, catalog, n_groups=args.groups, job_id=args.job_id,
-            extractor=args.extractor, patterns=patterns,
+            spark, catalog, n_groups=args.groups, job_id=args.job_id, patterns=patterns,
         )
         res = cp.run(transcripts, input_fingerprint=fingerprint)
         print(json.dumps({"mode": "checkpointed", **res}))
@@ -190,7 +182,6 @@ def main() -> None:
         res = run_pipeline(
             spark, transcripts, catalog,
             metrics_path=f"{args.warehouse}/_metrics/{args.job_id}.json",
-            extractor=args.extractor,
             patterns=patterns,
             audit=_suite_audit(args.audit_suite, catalog) if args.audit_suite
             else (True if args.audit else None),

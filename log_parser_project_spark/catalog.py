@@ -1,8 +1,8 @@
-"""Table catalog: Iceberg when available, parquet + manifests otherwise.
+"""Table catalog: parquet + snapshot manifests in place of Iceberg.
 
 The north rule calls for Iceberg tables. This sandbox has no
-``iceberg-spark-runtime`` jar and no network, so the catalog degrades
-to a parquet layout that preserves the *properties* we rely on Iceberg
+``iceberg-spark-runtime`` jar and no network, so the catalog is a
+parquet layout that preserves the *properties* we rely on Iceberg
 for (SURVEY.md §7.4 risk 1):
 
 * **partitioned layout** — ``partitionBy(...)`` directories give the
@@ -13,10 +13,6 @@ for (SURVEY.md §7.4 risk 1):
   ``<warehouse>/_manifests/``, which the checkpoint/resume machinery
   (``streaming/checkpoint.py``) uses for idempotent re-runs — the
   parquet stand-in for Iceberg's snapshot log.
-
-If an Iceberg jar is ever present (``ICEBERG_JAR`` env var or ivy
-cache), ``iceberg_available()`` flips and ``write_table`` uses
-``writeTo(...)`` instead; callers never branch.
 """
 
 from __future__ import annotations
@@ -96,15 +92,6 @@ class CatalogTransaction:
                 pass
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True iff an Iceberg Spark runtime is on the session classpath."""
-    try:
-        spark._jvm.org.apache.iceberg.Table  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
-
-
 @dataclass
 class Snapshot:
     """One committed write — the parquet analog of an Iceberg snapshot.
@@ -159,7 +146,6 @@ class Catalog:
         self.warehouse = warehouse
         self._manifest_dir = os.path.join(warehouse, "_manifests")
         os.makedirs(self._manifest_dir, exist_ok=True)
-        self.use_iceberg = iceberg_available(spark)
 
     # ---------------------------------------------------------------- paths
     def path(self, table: str) -> str:
@@ -1799,11 +1785,41 @@ class SnapshotCatalog(Catalog):
         if rng is None:
             return True
         fmin, fmax = rng
-        if lo is not None and fmax < lo:
-            return False
-        if hi is not None and fmin > hi:
-            return False
+        try:
+            if lo is not None:
+                stat, bound = SnapshotCatalog._as_stat_type(fmax, lo)
+                if stat < bound:
+                    return False
+            if hi is not None:
+                stat, bound = SnapshotCatalog._as_stat_type(fmin, hi)
+                if stat > bound:
+                    return False
+        except (TypeError, ValueError):
+            pass  # a bound that does not order against the stat → keep
         return True
+
+    @staticmethod
+    def _as_stat_type(stat, bound):
+        """``(stat, bound)`` as one type, ordered as Spark's row filter
+        orders the column. ``_stat_value`` keeps a timestamp stat as an
+        aware ISO string (``…+00:00``): against one, both sides become
+        UTC datetimes — the bound may be an ISO string, a date or a
+        datetime, a naive one read in the session time zone (UTC, which
+        ``session.py`` pins). Every other stat compares as it is."""
+        if isinstance(stat, str):
+            try:
+                ts = datetime.datetime.fromisoformat(stat)
+            except ValueError:
+                ts = None
+            if ts is not None and ts.tzinfo is not None:
+                if isinstance(bound, str):
+                    bound = datetime.datetime.fromisoformat(bound)
+                elif not isinstance(bound, datetime.datetime):
+                    bound = datetime.datetime.combine(bound, datetime.time())
+                if bound.tzinfo is None:
+                    bound = bound.replace(tzinfo=datetime.timezone.utc)
+                return ts, bound
+        return stat, bound
 
     # ------------------------------------------------------- bloom sidecars
     _BLOOM_SIDECAR = "_bloom.json"

@@ -10,9 +10,10 @@ PDF-extracted schema table or a pre-generated metadata JSON
 (``metadata_payload_parser.py:19-32``) for the same decode.
 
 Primitives are ASCII-explicit (no ``\\w``/``\\d``/``\\S``) for the
-same reason the registry regexes are: Python/Java/RE2 disagree on
-Unicode class tables, and the three proven-equivalent extractors must
-match byte-for-byte (see ``operators/parse._java_rx``).
+same reason the registry regexes are: Python and Java disagree on
+Unicode class tables, and a registry only runs on the compiled-JVM
+extractor when it means the same to both (see
+``operators/parse.choose_extractor`` and ``_java_rx``).
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ GROK_PRIMITIVES: dict[str, str] = {
     # track real logstash semantics (octet-validated IPV4, hour-only tz
     # offsets, leading-dot decimals, trailing-dot FQDNs, 63-char DNS
     # labels) WITHOUT the lookbehind/atomic-group constructs logstash's
-    # Oniguruma allows — those would break the RE2/JVM extractors.
+    # Oniguruma allows — those would keep a registry off the JVM extractor.
     # Internally NON-capturing so a %{PRIM:field} wrap stays one group.
     "BASE10NUM": "[+-]?(?:[0-9]+(?:\\.[0-9]+)?|\\.[0-9]+)",
     "HEXNUM": "0x[0-9a-fA-F]+",

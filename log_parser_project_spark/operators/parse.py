@@ -1,4 +1,4 @@
-"""Vectorized parse stage: classify (JVM) + extract (Arrow-batched).
+"""Vectorized parse stage: classify (JVM) + extract.
 
 Two sub-stages, mirroring the reference's decode pipeline
 (``hex_decoder_module/decoder/payload_decoder.py:32-131``):
@@ -12,21 +12,26 @@ Two sub-stages, mirroring the reference's decode pipeline
    prefix dispatch is registry DATA (``Pattern.prefix``), not code.
 
 2. **extract** — the field-decoder analog
-   (``decoder/field_decoder.py:14-114``): ONE Arrow-batched pandas UDF
-   applies the compiled registry. Per (class, version) it runs a
-   single vectorized pass over the masked slice of the batch — pandas
-   ``str.extract`` (``impl="pandas"``) or RE2 over Arrow string arrays
-   via ``pyarrow.compute.extract_regex`` (``impl="arrow"``) — no
-   per-row Python dispatch (north-star requirement). Patterns compile
-   once per executor process via a spec-keyed module cache, the analog
-   of the reference's LRU metadata cache (``icd_parser/cache.py``) —
-   except immutable, so no eviction.
+   (``decoder/field_decoder.py:14-114``). The registry picks the
+   engine (:func:`choose_extractor`, applied by :func:`parse_auto`):
 
-**The registry is injectable**: every stage (classify, both UDF
-extractors, the compiled-JVM extractor, repeat explode, enums, route)
-takes a ``patterns`` tuple defaulting to the module registry — a new
-or extended registry needs no code or plan changes
-(tests/test_custom_registry.py runs a disjoint registry end to end).
+   * ``jvm`` — :func:`parse_builtin` compiles the registry into
+     built-in ``regexp_extract`` expressions (no Python in the plan),
+     when every regex is engine-portable and compiles under
+     ``java.util.regex``;
+   * ``pandas`` — :func:`parse`, ONE Arrow-batched pandas UDF running
+     pandas ``str.extract`` (Python ``re``) once per (class, version)
+     over the masked slice of each batch — no per-row Python dispatch.
+     Patterns compile once per executor process via a spec-keyed
+     module cache, the analog of the reference's LRU metadata cache
+     (``icd_parser/cache.py``) — except immutable, so no eviction.
+     This is also the reference the pure-Python oracle mirrors.
+
+**The registry is injectable**: every stage (classify, both
+extractors, repeat explode, enums, route) takes a ``patterns`` tuple
+defaulting to the module registry — a new or extended registry needs
+no code or plan changes (tests/test_custom_registry.py runs a disjoint
+registry end to end).
 
 Output layout: instead of the reference's name-mangled flat fields
 (``"{name} (Record {i})"``), extraction lands in a typed struct column
@@ -113,28 +118,6 @@ def _registry_spec(patterns: tuple[Pattern, ...]):
     )
 
 
-def _re2_rx(regex: str) -> str:
-    """Python-re pattern → RE2 with identical semantics for the registry
-    grammar (ASCII classes, named groups, ``^...$`` anchors). The one
-    divergence: Python's ``$`` also matches just before a single
-    trailing newline, RE2's does not — translate a trailing *anchor*
-    ``$`` to ``(?:\\n)?\\z`` (the optional newline sits outside every
-    capture group, so extracted fields are unchanged). A trailing
-    ``\\$`` (escaped literal dollar, even number of preceding
-    backslashes means the ``$`` IS the anchor) is left untouched.
-    Interior ``$`` (e.g. per-alternative ``^a$|^b$``) is not
-    translated — those alternatives keep strict RE2 end-of-text
-    semantics; registry patterns use a single trailing anchor.
-    Equivalence on all three engines is fuzz-asserted
-    (tests/test_property_parse.py)."""
-    if not regex.endswith("$"):
-        return regex
-    n_backslashes = len(regex[:-1]) - len(regex[:-1].rstrip("\\"))
-    if n_backslashes % 2 == 1:  # '\$' — literal dollar, not an anchor
-        return regex
-    return regex[:-1] + r"(?:\n)?\z"
-
-
 # per-executor compiled-pattern cache, keyed by registry spec
 _COMPILED: dict[tuple, dict] = {}
 
@@ -156,7 +139,7 @@ def _compiled_for(spec) -> dict:
 _UDF_CACHE: dict[tuple, tuple] = {}
 
 
-def _make_extract_udf(patterns: tuple[Pattern, ...], impl: str):
+def _make_extract_udf(patterns: tuple[Pattern, ...]):
     """Build (udf, groups) for a registry — the registry-as-data path:
     the spec travels in the closure, compilation happens lazily on each
     executor, and a different registry is just a different spec."""
@@ -170,9 +153,8 @@ def _make_extract_udf(patterns: tuple[Pattern, ...], impl: str):
                 "capture groups — every pattern needs at least one"
             )
     spec = _registry_spec(patterns)
-    key = (spec, impl)
-    if key in _UDF_CACHE:
-        return _UDF_CACHE[key]
+    if spec in _UDF_CACHE:
+        return _UDF_CACHE[spec]
     groups_all = all_groups(patterns)
     schema = T.StructType(
         [T.StructField("matched", T.BooleanType())]
@@ -180,42 +162,9 @@ def _make_extract_udf(patterns: tuple[Pattern, ...], impl: str):
         + [T.StructField("repeats_enc", T.StringType())]
     )
 
-    # both engines share ONE loop body; they differ only in the matcher:
-    #   matcher(sub, rx, groups) -> (ok_mask: np.bool_[], {group: values[ok]})
-    # "pandas" = Series.str.extract (Python re); "arrow" = RE2 via
-    # pyarrow.compute.extract_regex — a single C++ pass over the Arrow
-    # string array per pattern per batch (≈1.5–2× the pandas kernel,
-    # bench.py match_kernel; the north star's "batched re2-style
-    # matching over Arrow string arrays", literally). Only the
-    # repeat-group findall (matched
-    # tool_call/citation rows) stays in Python re on either engine.
-    def _match_pandas(sub: pd.Series, rx, groups):
-        hit = sub.str.extract(rx)
-        # whole-regex validity, NOT first-group-non-null: an injectable
-        # registry may make its first capture optional ('(?P<a>x)? y'),
-        # and arrow (res.is_valid) / jvm (rlike) would count that row
-        # matched. str.contains shares str.extract's re.search anchor
-        # semantics, so the mask is exact.
+    def _run(text: pd.Series, cls: pd.Series, ver: pd.Series) -> pd.DataFrame:
         import warnings
 
-        with warnings.catch_warnings():
-            # pandas warns that a grouped pattern "should use str.extract";
-            # here contains-for-the-mask + extract-for-values is deliberate
-            warnings.simplefilter("ignore", UserWarning)
-            ok = sub.str.contains(rx).fillna(False).to_numpy(dtype=bool)
-        return ok, {g: hit[g].to_numpy(dtype=object)[ok] for g in groups}
-
-    def _match_arrow(sub: pd.Series, rx, groups):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        res = pc.extract_regex(pa.array(sub, type=pa.string()), pattern=_re2_rx(rx.pattern))
-        ok = res.is_valid().to_numpy(zero_copy_only=False)
-        return ok, {g: res.field(g).to_numpy(zero_copy_only=False)[ok] for g in groups}
-
-    matcher = {"pandas": _match_pandas, "arrow": _match_arrow}[impl]
-
-    def _run(text: pd.Series, cls: pd.Series, ver: pd.Series) -> pd.DataFrame:
         import numpy as np
 
         reg = _compiled_for(spec)
@@ -235,11 +184,21 @@ def _make_extract_udf(patterns: tuple[Pattern, ...], impl: str):
             pos = positions[mask]
             sub = text_reset.iloc[pos]
             # one vectorized pass per pattern per Arrow batch
-            ok, hit_groups = matcher(sub, rx, groups)
+            hit = sub.str.extract(rx)
+            # whole-regex validity, NOT first-group-non-null: an injectable
+            # registry may make its first capture optional ('(?P<a>x)? y'),
+            # and jvm (rlike) would count that row matched. str.contains
+            # shares str.extract's re.search anchor semantics, so the mask
+            # is exact.
+            with warnings.catch_warnings():
+                # pandas warns that a grouped pattern "should use str.extract";
+                # here contains-for-the-mask + extract-for-values is deliberate
+                warnings.simplefilter("ignore", UserWarning)
+                ok = sub.str.contains(rx).fillna(False).to_numpy(dtype=bool)
             hit_pos = pos[ok]
             matched_out[hit_pos] = True
             for g in groups:
-                group_out[g][hit_pos] = hit_groups[g]
+                group_out[g][hit_pos] = hit[g].to_numpy(dtype=object)[ok]
             if repeat_rx is not None and len(hit_pos):
                 findall = repeat_rx.findall
                 found = np.empty(len(hit_pos), dtype=object)
@@ -257,11 +216,11 @@ def _make_extract_udf(patterns: tuple[Pattern, ...], impl: str):
         return pd.DataFrame(out)
 
     udf = pandas_udf(schema)(_run)
-    _UDF_CACHE[key] = (udf, groups_all)
+    _UDF_CACHE[spec] = (udf, groups_all)
     return udf, groups_all
 
 
-# regex constructs whose semantics diverge between Python re, RE2 and
+# regex constructs whose semantics diverge between Python re and
 # java.util.regex (shorthand classes track different Unicode tables;
 # inline flags and group backrefs behave differently) — a registry
 # using any of these stays on the pandas (Python-re) engine, whose
@@ -275,8 +234,8 @@ _ENGINE_DIVERGENT = (
 def _has_optional_capture(regex: str) -> bool:
     """True when some CAPTURE group can match without participating —
     quantified with min=0, or inside one alternation branch. For such a
-    group pandas yields NULL while RE2/Arrow and ``regexp_extract``
-    both yield "" (indistinguishable from a legitimately-empty match),
+    group pandas yields NULL while ``regexp_extract`` yields ""
+    (indistinguishable from a legitimately-empty match),
     so the registry must stay on the pandas engine. Detected from the
     ``re`` parse tree — a textual ")?"-scan would misflag the safe
     non-capture ``(?:...)*``."""
@@ -337,23 +296,14 @@ def _portable(regex: str) -> bool:
 
 
 def choose_extractor(spark, patterns: tuple[Pattern, ...] = PATTERNS) -> str:
-    """Resolve ``extractor="auto"``: the fastest engine whose semantics
-    are provably identical for THIS registry. Cost model (bench.py's
-    ``match_kernel`` micro-bench — kernel-only, cached batch, no
-    exchange): jvm skips the Python exchange entirely (zero
-    ArrowEvalPython nodes, the whole plan stays codegen'd); arrow
-    (RE2) runs the match kernel ≈ 1.5–2× faster than pandas
-    ``str.extract``. Full-pass timings CANNOT rank arrow vs pandas —
-    the kernel is ~20 ms of a ~1.5 s distributed pass, inside box
-    noise, which is why r02/r03 full-pass orderings flip-flopped.
+    """The engine for THIS registry — the registry alone decides:
 
-    * ``jvm`` — registry compiled to built-in expressions — when every
-      regex is engine-portable (ASCII, explicit classes, no divergent
-      constructs) and compiles under ``java.util.regex``;
-    * else ``arrow`` — RE2 over Arrow string arrays — when RE2 accepts
-      every pattern (checked by compiling against an empty array);
-    * else ``pandas`` — Python ``re`` semantics, the universal
-      fallback (and what the pure-Python oracle implements).
+    * ``jvm`` (:func:`parse_builtin`) when every regex, repeat groups
+      included, is engine-portable (ASCII, explicit classes, no
+      divergent constructs, no optional captures) and compiles under
+      ``java.util.regex`` — no Python exchange in the plan at all;
+    * else ``pandas`` (:func:`parse`) — Python ``re`` semantics, the
+      universal fallback and what the pure-Python oracle implements.
     """
     # the repeat-group regex is part of the engine contract too: the
     # jvm path runs it through Java regexp_extract_all, so it needs
@@ -368,29 +318,15 @@ def choose_extractor(spark, patterns: tuple[Pattern, ...] = PATTERNS) -> str:
             return "jvm"
         except Exception:
             pass
-        try:
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            for p in patterns:
-                pc.extract_regex(pa.array([], type=pa.string()), pattern=_re2_rx(p.regex))
-            return "arrow"
-        except Exception:
-            pass
     return "pandas"
 
 
 def extract(
-    df: DataFrame,
-    text_col: str = "text",
-    impl: str = "pandas",
-    patterns: tuple[Pattern, ...] = PATTERNS,
+    df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
 ) -> DataFrame:
-    """Apply the registry; adds ``matched``, group columns (under
-    ``extracted.*``), and ``repeats``. ``impl="arrow"`` switches the
-    per-pattern matcher from pandas ``str.extract`` to RE2 over Arrow
-    arrays; outputs are identical (fuzz-asserted)."""
-    udf, groups_all = _make_extract_udf(patterns, impl)
+    """Apply the registry with the pandas UDF; adds ``matched``, group
+    columns (under ``extracted.*``), and ``repeats``."""
+    udf, groups_all = _make_extract_udf(patterns)
     parsed = df.withColumn(
         "_p", udf(F.col(text_col), F.col("pattern_class"), F.col("version"))
     )
@@ -410,13 +346,10 @@ def extract(
 
 
 def parse(
-    df: DataFrame,
-    text_col: str = "text",
-    impl: str = "pandas",
-    patterns: tuple[Pattern, ...] = PATTERNS,
+    df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
 ) -> DataFrame:
     """classify + extract in one call."""
-    return extract(classify(df, text_col, patterns), text_col, impl=impl, patterns=patterns)
+    return extract(classify(df, text_col, patterns), text_col, patterns=patterns)
 
 
 # ---------------------------------------------------------------------------
@@ -462,7 +395,7 @@ def explode_repeats(df: DataFrame, patterns: tuple[Pattern, ...] = PATTERNS) -> 
 
 
 # ---------------------------------------------------------------------------
-# 4. extract_builtin — pure-JVM alternative path (no Python at all)
+# 4. extract_builtin — the pure-JVM engine (no Python at all)
 # ---------------------------------------------------------------------------
 
 def _group_index(regex: str, group: str) -> int:
@@ -481,10 +414,14 @@ def _java_rx(regex: str) -> str:
     ASCII vs Python Unicode classes) and, with ``(?U)``, a Unicode
     *version* divergence (``CALL 𝼀 args={}``: U+1DF00 is a word char in
     Python 3.11's Unicode 14 tables but not Java 17's Unicode 13) —
-    explicit classes are engine- and version-independent."""
+    explicit classes are engine- and version-independent.
+
+    ``(?d)`` (UNIX_LINES) makes ``\n`` the only line terminator, as in
+    Python: otherwise Java's ``$`` also matches before a final ``\r``,
+    ``\u0085``, ``\u2028`` or ``\u2029``, and its ``.`` refuses them."""
     import re
 
-    return re.sub(r"\(\?P<\w+>", "(", regex)
+    return "(?d)" + re.sub(r"\(\?P<\w+>", "(", regex)
 
 
 def extract_builtin(
@@ -495,11 +432,9 @@ def extract_builtin(
     columns. Same output contract as :func:`extract`; equivalence is
     asserted by ``tests/test_extract_equivalence.py``.
 
-    ~10× the pandas-UDF path on this box (whole-stage codegen, no Arrow
-    round-trip). The UDF path stays the default because the registry
-    is *data* there (new patterns without plan changes, arbitrary
-    Python-regex features); this path compiles the registry into the
-    plan — right when the registry is static and throughput is king.
+    No Arrow round-trip: the whole plan stays whole-stage codegen'd.
+    :func:`choose_extractor` picks it for registries whose regexes are
+    engine-portable; any other registry runs the pandas UDF.
     """
     t = F.col(text_col)
     cls, ver = F.col("pattern_class"), F.col("version")
@@ -526,7 +461,7 @@ def extract_builtin(
             continue
         n_fields = len(p.repeat_fields)
         parts = [
-            F.regexp_extract_all(t, F.lit(p.repeat_group), i + 1) for i in range(n_fields)
+            F.regexp_extract_all(t, F.lit(_java_rx(p.repeat_group)), i + 1) for i in range(n_fields)
         ]
         zipped = F.zip_with(parts[0], parts[1], lambda a, b: F.array(a, b)) if n_fields == 2 else F.transform(parts[0], lambda a: F.array(a))
         repeats = F.when(
@@ -545,3 +480,13 @@ def parse_builtin(
 ) -> DataFrame:
     """classify + extract_builtin (the all-JVM pipeline variant)."""
     return extract_builtin(classify(df, text_col, patterns), text_col, patterns)
+
+
+def parse_auto(
+    spark, df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
+) -> DataFrame:
+    """classify + extract on the engine :func:`choose_extractor` picks
+    for ``patterns``; both engines give the same output contract."""
+    if choose_extractor(spark, patterns) == "jvm":
+        return parse_builtin(df, text_col, patterns)
+    return parse(df, text_col, patterns)

@@ -1,4 +1,4 @@
-"""Route stage: tag every row with its destination sink, then fan out.
+"""Route stage: tag every row with its destination sink.
 
 The reference writes one SQLite DB per run (``src/datastore.py``) and
 warns-and-continues on decode failures (``payload_decoder.py:111-113``).
@@ -7,21 +7,18 @@ pattern class's sink, unmatched/unparseable rows go to the quarantine
 sink ``sink_unmatched`` (the error channel / corrupt-row quarantine of
 SURVEY.md R3-P8).
 
-Fan-out strategy at scale: compute the parsed+routed DataFrame ONCE,
-persist it, then run one filtered write per sink. The alternative —
-``partitionBy("route")`` into a single table — is one job but couples
-sink schemas; filtered writes keep per-sink schemas/partitioning
-independent, and the persist guarantees the expensive parse stage runs
-once, not once per sink.
+Fan-out is not a separate job per sink: ``plans.pipeline.run_pipeline``
+writes the routed fact ONCE, partitioned by ``(route, day)``, so each
+logical sink is a partition subtree that ``read_sink`` prunes to — one
+pass over the text instead of one filtered write per sink.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..registry import PATTERNS, SINKS, Pattern
+from ..registry import PATTERNS, Pattern
 
 
 def route(df: DataFrame, patterns: tuple[Pattern, ...] = PATTERNS) -> DataFrame:
@@ -34,23 +31,3 @@ def route(df: DataFrame, patterns: tuple[Pattern, ...] = PATTERNS) -> DataFrame:
             F.col("pattern_class").isNull() | ~F.col("matched"), F.lit("sink_unmatched")
         ).otherwise(m[F.col("pattern_class")]),
     )
-
-
-def fan_out(df: DataFrame, writer, persist: bool = True) -> dict[str, int]:
-    """Write one sink per route via ``writer(sink_name, sink_df)``.
-
-    ``writer`` is any callable (catalog write, streaming sink, test
-    collector). Returns per-sink row counts. The input is persisted so
-    the parse stage executes once across the N sink actions.
-    """
-    if persist:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    counts: dict[str, int] = {}
-    try:
-        for sink in SINKS:
-            sink_df = df.filter(F.col("route") == sink)
-            counts[sink] = writer(sink, sink_df)
-    finally:
-        if persist:
-            df.unpersist()
-    return counts

@@ -31,7 +31,7 @@ from ..catalog import Catalog
 from ..metrics import dump, get_safe, observed
 from ..operators.aggregate import per_sink_aggregates_onepass
 from ..operators.enrich import apply_enums, derive_metrics, enrich
-from ..operators.parse import all_groups, explode_repeats, parse, parse_builtin
+from ..operators.parse import all_groups, explode_repeats, parse_auto
 from ..operators.route import route
 from ..registry import PATTERNS, Pattern, sinks_of
 
@@ -101,32 +101,17 @@ def default_audit(df: DataFrame) -> list[str]:
 def build_routed(
     spark: SparkSession,
     transcripts: DataFrame,
-    extractor: str = "auto",
     patterns: tuple[Pattern, ...] = PATTERNS,
 ) -> DataFrame:
     """The narrow portion of the plan: everything before any shuffle.
 
-    ``extractor="auto"`` (default) resolves per registry via
-    ``parse.choose_extractor`` — the static shipped registry compiles
-    to built-in expressions (``jvm``, the fastest pass), and a custom
-    registry falls back to RE2-over-Arrow (``arrow``) or pandas
-    ``str.extract`` (``pandas``, full Python-re semantics) as its
-    regex features demand. Outputs are identical across all three
+    The registry picks the extraction engine (``parse.parse_auto``):
+    compiled built-in expressions (``jvm``) when every regex is
+    portable to ``java.util.regex``, else the pandas ``str.extract``
+    UDF (full Python-re semantics). Both give the same output
     (tests/test_extract_equivalence.py, tests/test_property_parse.py).
     """
-    from ..operators.parse import choose_extractor
-
-    if extractor == "auto":
-        extractor = choose_extractor(spark, patterns)
-    if extractor not in ("pandas", "arrow", "jvm"):
-        raise ValueError(
-            f"unknown extractor {extractor!r}; use 'auto', 'pandas', 'arrow' or 'jvm'"
-        )
-    df = (
-        parse_builtin(transcripts, patterns=patterns)
-        if extractor == "jvm"
-        else parse(transcripts, impl=extractor, patterns=patterns)
-    )
+    df = parse_auto(spark, transcripts, patterns=patterns)
     df = enrich(df, spark)
     df = apply_enums(df, patterns)
     if {"latency_ms", "tokens"} <= set(all_groups(patterns)):
@@ -138,7 +123,8 @@ def build_routed(
 def read_sink(catalog: Catalog, sink: str, ts_range: tuple | None = None) -> DataFrame:
     """A logical sink = one route partition of the staging table.
 
-    ``ts_range=(lo, hi)`` (ISO strings or datetimes; either bound None)
+    ``ts_range=(lo, hi)`` (ISO strings or datetimes, a naive one in the
+    session time zone; either bound None; both inclusive)
     narrows to a time window: on a SnapshotCatalog the manifest ts
     stats prune whole files at planning time (the commit records
     per-file min/max), and the row-level filter on top keeps the result
@@ -146,11 +132,7 @@ def read_sink(catalog: Catalog, sink: str, ts_range: tuple | None = None) -> Dat
     from ..catalog import SnapshotCatalog
 
     if ts_range is not None and isinstance(catalog, SnapshotCatalog):
-        lo, hi = ts_range
-        iso = lambda v: v.isoformat() if hasattr(v, "isoformat") else v  # noqa: E731
-        df = catalog.read_table(
-            STAGING_TABLE, predicate=("ts", iso(lo) if lo else None, iso(hi) if hi else None)
-        )
+        df = catalog.read_table(STAGING_TABLE, predicate=("ts", *ts_range))
     else:
         df = catalog.read_table(STAGING_TABLE)
     df = df.filter(F.col("route") == sink)
@@ -169,7 +151,6 @@ def run_pipeline(
     catalog: Catalog,
     metrics_path: str | None = None,
     write_repeats: bool = True,
-    extractor: str = "auto",
     patterns: tuple[Pattern, ...] = PATTERNS,
     audit=None,
 ) -> PipelineResult:
@@ -187,7 +168,7 @@ def run_pipeline(
         raise ValueError("audit (write-audit-publish) requires a SnapshotCatalog")
 
     routed, obs = observed(
-        build_routed(spark, transcripts, extractor=extractor, patterns=patterns)
+        build_routed(spark, transcripts, patterns=patterns)
     )
 
     # cluster rows by the partition key before the dynamic-partition

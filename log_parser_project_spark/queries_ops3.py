@@ -238,8 +238,8 @@ _PIPELINE_SQL = f"""
 
 @_register("q_pl_routed_events", _PIPELINE_SQL)
 def q_pl_routed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL pipeline (extractor="auto" → compiled-JVM for the
-    shipped registry) over events-derived transcripts, flattened for
+    """The REAL pipeline (the shipped registry picks the compiled-JVM
+    extractor) over events-derived transcripts, flattened for
     the oracle compare."""
     from .plans.pipeline import build_routed
 
@@ -292,12 +292,9 @@ def q_pl_repeat_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``explode_repeats`` (the repeating-record expansion of
     ``payload_decoder.py:133-209``) on the events-derived transcripts,
     against a DuckDB unnest-with-ordinality oracle."""
-    from .operators.parse import choose_extractor, explode_repeats, parse, parse_builtin
+    from .operators.parse import explode_repeats, parse_auto
 
-    t = events_transcripts(spark, sf_dir)
-    impl = choose_extractor(spark)
-    parsed = parse_builtin(t) if impl == "jvm" else parse(t, impl=impl)
-    return explode_repeats(parsed)
+    return explode_repeats(parse_auto(spark, events_transcripts(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------

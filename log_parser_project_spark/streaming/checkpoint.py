@@ -46,7 +46,6 @@ class CheckpointedPipeline:
         catalog: Catalog,
         n_groups: int = 8,
         job_id: str = "default",
-        extractor: str = "auto",
         patterns=None,
     ):
         from ..registry import PATTERNS
@@ -55,7 +54,6 @@ class CheckpointedPipeline:
         self.catalog = catalog
         self.n_groups = n_groups
         self.job_id = job_id
-        self.extractor = extractor
         self.patterns = PATTERNS if patterns is None else patterns
         self.ckpt_dir = os.path.join(catalog.warehouse, "_checkpoints", job_id)
         os.makedirs(self.ckpt_dir, exist_ok=True)
@@ -108,11 +106,7 @@ class CheckpointedPipeline:
                 continue
             t0 = time.time()
             part = grouped.filter(F.col("_group") == g).drop("_group")
-            routed, obs = observed(
-                build_routed(
-                    self.spark, part, extractor=self.extractor, patterns=self.patterns
-                )
-            )
+            routed, obs = observed(build_routed(self.spark, part, patterns=self.patterns))
             out = routed.withColumn("day", F.to_date("ts")).repartition("route")
             # per-group atomic overwrite IS the commit mechanism here
             # (exactly-once per group); use the base flat layout even on a

@@ -1,6 +1,6 @@
 """Registry-as-data: a brand-new registry (disjoint classes, its own
 prefixes, enums, repeats, versions) runs through classify → extract
-(all three engines) → enums → route with NO code or plan changes —
+(both engines) → enums → route with NO code or plan changes —
 the engine analog of the reference decoding a new logcode the moment
 its metadata JSON exists (``metadata_payload_parser.py``)."""
 
@@ -67,13 +67,13 @@ def _df(spark):
     ).withColumn("ts", F.current_timestamp())
 
 
-@pytest.mark.parametrize("engine", ["pandas", "arrow", "jvm"])
+@pytest.mark.parametrize("engine", ["pandas", "jvm"])
 def test_custom_registry_end_to_end(spark, engine):
     df = _df(spark)
     parsed = (
         parse_builtin(df, patterns=CUSTOM)
         if engine == "jvm"
-        else parse(df, impl=engine, patterns=CUSTOM)
+        else parse(df, patterns=CUSTOM)
     )
     out = route(apply_enums(parsed, patterns=CUSTOM), patterns=CUSTOM)
     rows = {r.turn_idx: r for r in out.collect()}
@@ -135,7 +135,7 @@ def test_wide_generated_registry(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
     ).withColumn("ts", F.current_timestamp())
-    out = route(parse(df, impl="arrow", patterns=wide), patterns=wide)
+    out = route(parse(df, patterns=wide), patterns=wide)
     got = out.select("turn_idx", "pattern_class", "matched", "route", "extracted").collect()
     assert len(got) == 200
     for r in got:
@@ -237,7 +237,7 @@ def test_checkpointed_pipeline_honors_custom_registry(spark, tmp_path):
     ).withColumn("ts", F.lit("2026-01-01 00:00:00").cast("timestamp"))
     cat = Catalog(spark, str(tmp_path / "wh"))
     cp = CheckpointedPipeline(
-        spark, cat, n_groups=2, job_id="t", extractor="jvm", patterns=(CUSTOM[0],)
+        spark, cat, n_groups=2, job_id="t", patterns=(CUSTOM[0],)
     )
     cp.run(tdf)
     out = cp.read_output().collect()
@@ -276,15 +276,6 @@ def test_prefixless_class_fails_loudly(spark):
         classify(df, patterns=pats)
 
 
-def test_re2_translation_escaped_dollar():
-    from log_parser_project_spark.operators.parse import _re2_rx
-
-    assert _re2_rx(r"^a=(?P<a>[0-9]+)$") == r"^a=(?P<a>[0-9]+)(?:\n)?\z"
-    assert _re2_rx(r"^cost=(?P<c>[0-9]+)\$") == r"^cost=(?P<c>[0-9]+)\$"  # literal $
-    assert _re2_rx(r"^p=(?P<p>[a-z]+)\\$") == r"^p=(?P<p>[a-z]+)\\(?:\n)?\z"  # '\\' + anchor
-    assert _re2_rx(r"^x(?P<x>[0-9])") == r"^x(?P<x>[0-9])"  # no trailing anchor
-
-
 def test_registry_from_json_bad_path_raises_filenotfound():
     from log_parser_project_spark.registry import registry_from_json
 
@@ -294,7 +285,7 @@ def test_registry_from_json_bad_path_raises_filenotfound():
 
 def test_optional_first_group_matches_on_all_engines(spark):
     """A custom pattern whose FIRST capture group is optional: the match
-    verdict must come from whole-regex validity (arrow/jvm semantics),
+    verdict must come from whole-regex validity (jvm semantics),
     not first-group-non-null — ADVICE r01 divergence regression."""
     opt = (
         Pattern(
@@ -311,19 +302,15 @@ def test_optional_first_group_matches_on_all_engines(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
     ).withColumn("ts", F.current_timestamp())
-    for engine in ("pandas", "arrow", "jvm"):
-        parsed = (
-            parse_builtin(df, patterns=opt)
-            if engine == "jvm"
-            else parse(df, impl=engine, patterns=opt)
-        )
+    for engine in ("pandas", "jvm"):
+        parsed = parse_builtin(df, patterns=opt) if engine == "jvm" else parse(df, patterns=opt)
         got = {r.turn_idx: (r.matched, r.extracted["op"]) for r in parsed.collect()}
         assert got[0] == (True, "merge"), engine
         assert got[1] == (True, "merge"), engine
 
 
 def test_choose_extractor_resolution(spark):
-    """extractor="auto": portable static registries compile to the jvm
+    """choose_extractor: portable static registries compile to the jvm
     path; registries using engine-divergent regex features (\\w, inline
     flags, lookbehind) stay on Python-re semantics."""
     from log_parser_project_spark.operators.parse import choose_extractor
@@ -352,14 +339,14 @@ def test_choose_extractor_resolution(spark):
 
 
 def test_pipeline_auto_extractor_matches_pandas(spark):
-    """build_routed default (auto → jvm here) and an explicit pandas run
-    produce identical routed rows."""
+    """build_routed (the shipped registry picks jvm) and the pandas
+    engine produce identical routed rows."""
     from log_parser_project_spark.generate import make_transcripts
     from log_parser_project_spark.plans.pipeline import build_routed
 
     t = make_transcripts(spark, n_convs=60)
     auto = build_routed(spark, t)
-    ref = build_routed(spark, t, extractor="pandas")
+    ref = route(parse(t))
     cols = ["conv_id", "turn_idx", "route", "matched", "pattern_class"]
     assert sorted(map(tuple, auto.select(cols).collect())) == \
            sorted(map(tuple, ref.select(cols).collect()))
@@ -367,7 +354,7 @@ def test_pipeline_auto_extractor_matches_pandas(spark):
 
 def test_optional_group_registry_stays_on_pandas(spark):
     """Non-participating optional groups decode as NULL on pandas but ""
-    on RE2/JVM — choose_extractor must keep such registries on the
+    on JVM — choose_extractor must keep such registries on the
     Python-re engine whose semantics the oracle implements."""
     from log_parser_project_spark.operators.parse import choose_extractor
 
@@ -379,6 +366,31 @@ def test_optional_group_registry_stays_on_pandas(spark):
         ),
     )
     assert choose_extractor(spark, opt) == "pandas"
+
+
+def test_registry_java_rejects_stays_on_pandas(spark):
+    """A portable regex that java.util.regex refuses (``a{,3}``, which
+    Python re reads as 0..3 repeats) runs on pandas, with Python-re
+    semantics."""
+    from log_parser_project_spark.operators.parse import choose_extractor
+    from log_parser_project_spark.plans.pipeline import build_routed
+
+    pats = (
+        Pattern(
+            pattern_class="ev", version=1, regex=r"^EV (?P<n>a{,3})b$",
+            groups=("n",), route="sink_ev", prefix="EV ",
+        ),
+    )
+    assert choose_extractor(spark, pats) == "pandas"
+    df = spark.createDataFrame(
+        [("c", 0, "user", "EV aab", None), ("c", 1, "user", "EV a{,3}b", None)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.current_timestamp())
+    got = {
+        r.turn_idx: (r.matched, r.extracted["n"])
+        for r in build_routed(spark, df, patterns=pats).collect()
+    }
+    assert got == {0: (True, "aa"), 1: (False, None)}
 
 
 def test_optional_capture_detection_handles_exotic_ops():

@@ -27,33 +27,31 @@ def test_udf_and_builtin_extraction_identical(spark, transcripts_small):
     assert not diffs, f"{len(diffs)} mismatches, e.g. {next(iter(diffs.items()))}"
 
 
-def test_arrow_re2_extraction_identical(spark, transcripts_small):
-    a = _rows(parse(transcripts_small))
-    c = _rows(parse(transcripts_small, impl="arrow"))
-    assert a.keys() == c.keys()
-    diffs = {k: (a[k], c[k]) for k in a if a[k] != c[k]}
-    assert not diffs, f"{len(diffs)} mismatches, e.g. {next(iter(diffs.items()))}"
-
-
-def test_arrow_re2_trailing_newline_parity(spark):
-    """Python's ``$`` matches before one trailing newline; the RE2
-    translation (``(?:\\n)?\\z``) must reproduce that, including NOT
-    matching two newlines or an interior one."""
-    rows = [
-        ("c", 1, "user", "latency_ms=5 tokens=10", None),
-        ("c", 2, "user", "latency_ms=5 tokens=10\n", None),
-        ("c", 3, "user", "latency_ms=5 tokens=10\n\n", None),
-        ("c", 4, "user", "latency_ms=5 tokens=10\nx", None),
-        ("c", 5, "user", "HANDOFF to=a reason=b\n", None),
+def test_jvm_line_terminator_parity(spark):
+    """Python's ``$`` matches before one trailing ``\\n`` and no other
+    line terminator; the JVM engine must agree — including NOT matching
+    two newlines, an interior one, or a trailing ``\\r``/``\\u0085``/
+    ``\\u2028`` (Java's default ``$`` accepts those)."""
+    texts = [
+        "latency_ms=5 tokens=10",
+        "latency_ms=5 tokens=10\n",
+        "latency_ms=5 tokens=10\n\n",
+        "latency_ms=5 tokens=10\nx",
+        "HANDOFF to=a reason=b\n",
+        "latency_ms=5 tokens=10\r",
+        "latency_ms=5 tokens=10\u0085",
+        "HANDOFF to=a reason=b\u2028",
     ]
     df = spark.createDataFrame(
-        [(c, t, r, x, tl) for c, t, r, x, tl in rows],
+        [("c", i, "user", x, None) for i, x in enumerate(texts, 1)],
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.current_timestamp())
     a = _rows(parse(df))
-    c = _rows(parse(df, impl="arrow"))
-    assert a == c
-    assert [a[("c", i)][0] for i in range(1, 6)] == [True, True, False, False, True]
+    b = _rows(parse_builtin(df))
+    assert a == b
+    assert [a[("c", i)][0] for i in range(1, 9)] == [
+        True, True, False, False, True, False, False, False,
+    ]
 
 
 def test_builtin_plan_is_pure_jvm(spark, transcripts_small):

@@ -112,7 +112,7 @@ ACCESS_LOG_GROK = (
 )
 
 
-@pytest.mark.parametrize("engine", ["pandas", "arrow", "jvm"])
+@pytest.mark.parametrize("engine", ["pandas", "jvm"])
 def test_access_log_grok_through_pipeline(spark, engine):
     """An apache-access-log-style grok pattern authored purely from the
     standard primitive vocabulary parses through the real pipeline on
@@ -134,7 +134,7 @@ def test_access_log_grok_through_pipeline(spark, engine):
     parsed = (
         parse_builtin(df, patterns=patterns)
         if engine == "jvm"
-        else parse(df, impl=engine, patterns=patterns)
+        else parse(df, patterns=patterns)
     )
     got = {r.turn_idx: r for r in parsed.collect()}
     ex = got[0].extracted

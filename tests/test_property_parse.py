@@ -43,13 +43,7 @@ def test_parse_matches_oracle_on_arbitrary_text(spark, texts):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    from functools import partial
-
-    for engine, parser in (
-        ("pandas", parse),
-        ("arrow", partial(parse, impl="arrow")),
-        ("jvm", parse_builtin),
-    ):
+    for engine, parser in (("pandas", parse), ("jvm", parse_builtin)):
         got = {
             r.turn_idx: (r.pattern_class, r.matched, tuple(r.extracted[g] for g in ALL_GROUPS))
             for r in parser(df).collect()

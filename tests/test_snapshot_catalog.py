@@ -510,6 +510,27 @@ def test_pipeline_staging_records_ts_stats_and_read_sink_prunes(spark, transcrip
     assert narrow.count() == full
 
 
+def test_read_sink_upper_bound_on_a_files_smallest_ts(spark, transcripts_small, tmp_path):
+    """An upper bound exactly on a file's smallest ts keeps that file,
+    whether the bound is a naive ISO string, a naive datetime (both in
+    the session time zone, UTC) or an aware datetime."""
+    import datetime
+
+    from log_parser_project_spark.plans.pipeline import STAGING_TABLE, read_sink, run_pipeline
+
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    run_pipeline(spark, transcripts_small, cat, write_repeats=False)
+    files = cat.snapshot(STAGING_TABLE).state[0]["files"]
+    edge = max(st["ts"][0] for f, st in files.items() if "route=sink_errors" in f)
+    aware = datetime.datetime.fromisoformat(edge)
+    assert aware.utcoffset() == datetime.timedelta(0)
+    naive = aware.replace(tzinfo=None)
+    full = read_sink(cat, "sink_errors").filter(F.col("ts") <= F.lit(aware)).count()
+    assert full > 0
+    for hi in (naive.isoformat(), naive, aware):
+        assert read_sink(cat, "sink_errors", (None, hi)).count() == full, hi
+
+
 def test_sort_order_makes_file_skipping_selective(spark, cat):
     """Global write sort order: without it a randomly-distributed write
     leaves every file spanning the whole domain (skipping never fires);
