@@ -118,7 +118,7 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.plans.pipeline import run_pipeline
 
     tdf = make_transcripts(spark, n_convs=n_convs, parts=cpus * 2)
@@ -142,7 +142,7 @@ def main() -> None:
         wh = tempfile.mkdtemp(prefix="bench_wh_")
         try:
             t0 = time.perf_counter()
-            run_pipeline(spark, tdf, Catalog(spark, wh), write_repeats=True)
+            run_pipeline(spark, tdf, SnapshotCatalog(spark, wh), write_repeats=True)
             if trial > 0:
                 pipeline_sec = min(pipeline_sec, time.perf_counter() - t0)
         finally:

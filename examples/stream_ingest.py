@@ -9,7 +9,8 @@ needs (all `trigger(availableNow)` — drain what's there, then stop,
 so cron-style re-runs are incremental):
 
 1. first drop → one drain parses/enriches/routes it into the staging
-   table (exactly-once per micro-batch via per-batch overwrite)
+   table (exactly-once per micro-batch: each batch commits as a snapshot
+   replacing its own ``batch=<id>`` partition)
 2. second drop → a re-run processes ONLY the new files (source
    offsets live in the stream checkpoint), no reprocessing
 3. a conversation's turns are RE-SENT (at-least-once upstream):
@@ -31,7 +32,7 @@ sys.path.insert(0, ".")  # run from the repo root
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from log_parser_project_spark.catalog import Catalog, SnapshotCatalog  # noqa: E402
+from log_parser_project_spark.catalog import SnapshotCatalog  # noqa: E402
 from log_parser_project_spark.generate import make_transcripts  # noqa: E402
 from log_parser_project_spark.session import get_spark  # noqa: E402
 from log_parser_project_spark.streaming.stream import (  # noqa: E402
@@ -53,13 +54,13 @@ def main() -> None:
     spark = get_spark(parallelism=8)
     root = Path(tempfile.mkdtemp(prefix="stream_demo_"))
     landing = str(root / "landing")
-    cat = Catalog(spark, str(root / "wh"))
+    cat = SnapshotCatalog(spark, str(root / "wh"))
 
     # ---- drop 1: 60 conversations land ----------------------------
     drop1 = make_transcripts(spark, n_convs=60)
     drop1.write.mode("append").parquet(landing)
     stream_pipeline(spark, landing, cat, str(root / "ckpt"))
-    staged = spark.read.parquet(cat.path("stream_staging"))
+    staged = cat.read_table("stream_staging")
     print(f"after drop 1: {staged.count()} routed turns")
     print("  per route:", _route_counts(staged))
 
@@ -69,7 +70,7 @@ def main() -> None:
     new.unionByName(resent).write.mode("append").parquet(landing)
 
     stream_pipeline(spark, landing, cat, str(root / "ckpt"))
-    staged = spark.read.parquet(cat.path("stream_staging"))
+    staged = cat.read_table("stream_staging")
     n_dupes = staged.count() - staged.select("conv_id", "turn_idx").distinct().count()
     print(f"\nafter drop 2: {staged.count()} routed turns (only new files were read)")
     print(f"  re-sent turns kept as duplicates by the append-only path: {n_dupes}")
@@ -77,12 +78,11 @@ def main() -> None:
     # a third drain with nothing new is a no-op
     before = staged.count()
     stream_pipeline(spark, landing, cat, str(root / "ckpt"))
-    assert spark.read.parquet(cat.path("stream_staging")).count() == before
+    assert cat.read_table("stream_staging").count() == before
 
     # ---- the same landing zone through the upsert path ------------
-    snap_cat = SnapshotCatalog(spark, str(root / "wh_upsert"))
-    stream_upsert(spark, landing, snap_cat, str(root / "ckpt_upsert"))
-    up = snap_cat.read_table("turns_upserted")
+    stream_upsert(spark, landing, cat, str(root / "ckpt_upsert"))
+    up = cat.read_table("turns_upserted")
     assert up.select("conv_id", "turn_idx").distinct().count() == up.count()
     print(f"\nupsert path: {up.count()} turns, re-sent rows replaced (key-unique)")
 

@@ -69,7 +69,8 @@ def main() -> None:
     ap.add_argument("--job-id", default="default")
     ap.add_argument(
         "--compact", action="store_true",
-        help="after the run, rewrite the staging sink into "
+        help="after the run, rewrite the table it wrote (the staging "
+             "sink, or the per-group table when --checkpointed) into "
              "~128MB files (rewrite_data_files maintenance)",
     )
     ap.add_argument(
@@ -114,7 +115,10 @@ def main() -> None:
     from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.generate import make_transcripts
     from log_parser_project_spark.plans.pipeline import run_pipeline
-    from log_parser_project_spark.streaming.checkpoint import CheckpointedPipeline
+    from log_parser_project_spark.streaming.checkpoint import (
+        GROUPS_TABLE,
+        CheckpointedPipeline,
+    )
 
     # production entry uses the snapshot-committing catalog: every run is
     # a new snapshot (time-travelable, expirable), never an in-place clobber
@@ -196,14 +200,14 @@ def main() -> None:
     from log_parser_project_spark.plans.pipeline import STAGING_TABLE
 
     if args.compact:
-        if args.checkpointed:
-            # per-group atomic overwrite IS the checkpointed commit
-            # mechanism — rewriting the group tree would break resume;
-            # fragmentation there is bounded by groups × routes anyway
-            print(json.dumps({"compact": "skipped",
-                              "reason": "checkpointed per-group layout"}))
-        elif catalog.exists(STAGING_TABLE):
-            catalog.compact(STAGING_TABLE, partition_by=["route", "day"])
+        # the compacted snapshot keeps the (group, route) layout, so a
+        # later re-run of one group still replaces just its subtree
+        table, layout = (
+            (GROUPS_TABLE, ["group", "route"]) if args.checkpointed
+            else (STAGING_TABLE, ["route", "day"])
+        )
+        if catalog.exists(table):
+            catalog.compact(table, partition_by=layout)
 
     # retention: every run rewrites the dim tables and commits fresh
     # sink/agg snapshots — without expiry the warehouse grows per run

@@ -424,27 +424,30 @@ def main(argv: list[str] | None = None) -> int:
             queries = cat.read_table(st["base_table"]).filter(
                 F.col(args.id_col).cast("string").isin(args.query_id)
             ).persist()
-            # the found-set must render ids through the SAME Spark
-            # string cast the filter used — Python str() of a collected
-            # float/bool disagrees with Spark's rendering
-            found = {
-                r[0]
-                for r in queries.select(
-                    F.col(args.id_col).cast("string")
-                ).distinct().collect()
-            }
-            missing = [v for v in args.query_id if v not in found]
-            if missing:
-                print(f"error: --query-id not in base table "
-                      f"{st['base_table']!r}: {missing}", file=sys.stderr)
-                return 2
-            df = vi.vector_index_topk(
-                cat, args.index, queries, k=args.k, n_probe=args.n_probe,
-                id_col=args.id_col, vec_col=args.vec_col,
-            )
-            out["results"] = [
-                r.asDict() for r in df.orderBy("query_id", "rank").collect()
-            ]
+            try:
+                # the found-set must render ids through the SAME Spark
+                # string cast the filter used — Python str() of a
+                # collected float/bool disagrees with Spark's rendering
+                found = {
+                    r[0]
+                    for r in queries.select(
+                        F.col(args.id_col).cast("string")
+                    ).distinct().collect()
+                }
+                missing = [v for v in args.query_id if v not in found]
+                if missing:
+                    print(f"error: --query-id not in base table "
+                          f"{st['base_table']!r}: {missing}", file=sys.stderr)
+                    return 2
+                df = vi.vector_index_topk(
+                    cat, args.index, queries, k=args.k, n_probe=args.n_probe,
+                    id_col=args.id_col, vec_col=args.vec_col,
+                )
+                out["results"] = [
+                    r.asDict() for r in df.orderBy("query_id", "rank").collect()
+                ]
+            finally:
+                queries.unpersist()
         print(json.dumps(out, indent=2, default=str))
         return 0
 

@@ -1,18 +1,22 @@
 """Table catalog: parquet + snapshot manifests in place of Iceberg.
 
 The north rule calls for Iceberg tables. This sandbox has no
-``iceberg-spark-runtime`` jar and no network, so the catalog is a
-parquet layout that preserves the *properties* we rely on Iceberg
-for (SURVEY.md §7.4 risk 1):
+``iceberg-spark-runtime`` jar and no network, so :class:`SnapshotCatalog`
+is a parquet layout that preserves the *properties* we rely on Iceberg
+for (SURVEY.md §7.4 risk 1), with ONE commit path for every table:
 
 * **partitioned layout** — ``partitionBy(...)`` directories give the
   same partition-pruning behavior Catalyst would get from Iceberg
   partition specs (``days(ts)``/``bucket(conv_id)`` analogs);
-* **atomic-ish commits with snapshot manifests** — every write records
-  a JSON manifest (snapshot id, row count, input lineage) under
-  ``<warehouse>/_manifests/``, which the checkpoint/resume machinery
-  (``streaming/checkpoint.py``) uses for idempotent re-runs — the
-  parquet stand-in for Iceberg's snapshot log.
+* **atomic commits with snapshot manifests** — every write lands in a
+  fresh snapshot directory and commits a manifest (snapshot id, row
+  count, lineage, the list of live data directories) under
+  ``<warehouse>/_manifests/`` by an atomic pointer swap — the parquet
+  stand-in for Iceberg's snapshot log. A dynamic overwrite
+  (``replace_partitions``) is just another snapshot; the checkpointed
+  pipeline (``streaming/checkpoint.py``) and the streaming sink
+  (``streaming/stream.py``) commit their per-group / per-batch units
+  through it for idempotent re-runs.
 """
 
 from __future__ import annotations
@@ -96,9 +100,9 @@ class CatalogTransaction:
 class Snapshot:
     """One committed write — the parquet analog of an Iceberg snapshot.
 
-    ``state`` (SnapshotCatalog only) is the manifest: the list of data
-    directories (warehouse-relative) whose files make up the table at
-    this snapshot, each with partition-subpath ``exclude`` prefixes for
+    ``state`` is the manifest: the list of data directories
+    (warehouse-relative) whose files make up the table at this
+    snapshot, each with partition-subpath ``exclude`` prefixes for
     manifest-level partition replacement (Iceberg's overwrite-by-filter
     without touching old files).
     """
@@ -112,10 +116,10 @@ class Snapshot:
     op: str = "overwrite"
     state: list = field(default_factory=list)
     sequence: int = 0
-    #: JSON-serialized StructType of the table AT this snapshot
-    #: (SnapshotCatalog only; None on legacy manifests). Appends may
-    #: ADD columns — older data dirs then read back with nulls for the
-    #: later-added columns, Iceberg's add-column schema evolution.
+    #: JSON-serialized StructType of the table AT this snapshot (None
+    #: on legacy manifests). Appends may ADD columns — older data dirs
+    #: then read back with nulls for the later-added columns, Iceberg's
+    #: add-column schema evolution.
     schema_json: str | None = None
     #: Iceberg hidden partitioning: the partition spec this snapshot
     #: was written under — a list of {"transform", "source", "name"}
@@ -127,7 +131,7 @@ class Snapshot:
     #: added_files/added_bytes/added_rows for the new directory(ies),
     #: total_entries for the resulting state. Harvested from the
     #: just-written files' metadata (no data read); empty on legacy
-    #: manifests and base-Catalog commits.
+    #: manifests.
     summary: dict = field(default_factory=dict)
     #: write-audit-publish: True while the snapshot sits in the log
     #: awaiting :meth:`SnapshotCatalog.publish` (pointer never flipped).
@@ -138,8 +142,44 @@ class Snapshot:
     staged: bool = False
 
 
-class Catalog:
-    """Warehouse-rooted table catalog with snapshot manifests."""
+class SnapshotCatalog:
+    """Iceberg-table semantics on plain parquet: snapshot isolation,
+    time travel, append, manifest-level dynamic partition overwrite,
+    incremental scan, and snapshot expiry.
+
+    The reference's store is overwrite-in-place SQLite
+    (``src/datastore.py:148-212``); Iceberg (named by the north rule)
+    adds a snapshot log — this class supplies those semantics without
+    the (unavailable offline) ``iceberg-spark-runtime`` jar:
+
+    * every commit writes into a fresh ``<table>/snap-<seq>-<id>/``
+      directory and appends a manifest line to
+      ``_manifests/<table>.log.jsonl``; the commit point is an atomic
+      ``os.replace`` of the ``<table>.json`` pointer (readers never see
+      a half-written snapshot);
+    * a snapshot's ``state`` lists the directories (and partition-
+      subpath exclusions) that make up the table — scan planning is
+      manifest-driven, like Iceberg's manifest lists, so `overwrite`
+      never deletes files and old snapshots stay readable (time travel)
+      until :meth:`expire_snapshots`;
+    * ``replace_partitions`` = Iceberg's dynamic overwrite: the new
+      snapshot masks the replaced partition subtrees of earlier
+      directories via ``exclude`` prefixes and adds the new directory —
+      an idempotent, exactly-once-per-partition commit primitive for
+      resume (SURVEY.md §7.4 risk 7);
+    * ``read_table(..., since=snap)`` is the incremental (CDC-style)
+      scan over directories added by append commits after ``snap``.
+
+    Concurrency contract: all manifest-log mutations (commit appends,
+    publish, and the read-filter-rewrite maintenance paths
+    ``abandon_stage`` / ``expire_snapshots``) serialize on a per-table
+    ``flock`` sidecar (:meth:`_log_lock`), so a commit can never be
+    silently dropped by a concurrent rewrite on the same host.
+    Multiple writers on DIFFERENT hosts against a shared filesystem
+    are out of scope — that coordination belongs to a real catalog
+    service (Hive/REST/Glue), which is exactly what Iceberg's atomic
+    metadata swap delegates to.
+    """
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
@@ -152,48 +192,8 @@ class Catalog:
         return os.path.join(self.warehouse, table)
 
     def exists(self, table: str) -> bool:
-        p = self.path(table)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f.startswith("part-") or "=" in f
-            for f in os.listdir(p)
-        )
-
-    # ---------------------------------------------------------------- write
-    def write_table(
-        self,
-        df: DataFrame,
-        table: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-        lineage: dict | None = None,
-        row_count=None,
-    ) -> Snapshot:
-        """Write ``df`` and commit a snapshot manifest.
-
-        ``row_count`` may be an int, or a zero-arg callable evaluated
-        *after* the write action (e.g. reading an Observation populated
-        by the same job) — either way no second pass over the data.
-        """
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(table))
-        if callable(row_count):
-            row_count = int(row_count())
-        if row_count is None:
-            row_count = self._dir_row_count(self.path(table))
-        snap = Snapshot(
-            snapshot_id=uuid.uuid4().hex[:16],
-            table=table,
-            row_count=row_count,
-            committed_at_unix=time.time(),
-            lineage=lineage or {},
-        )
-        with open(
-            os.path.join(self._manifest_dir, f"{table.replace('/', '__')}.json"), "w"
-        ) as f:
-            json.dump(asdict(snap), f, indent=2)
-        return snap
+        """A table exists once it has a committed pointer manifest."""
+        return self.snapshot(table) is not None
 
     @staticmethod
     def _dir_row_count(absdir: str) -> int:
@@ -212,15 +212,6 @@ class Catalog:
                 if fn.endswith(".parquet"):
                     n += pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
         return n
-
-    # ---------------------------------------------------------------- read
-    def read_table(self, table: str, schema=None) -> DataFrame:
-        """``schema`` makes reads of legitimately-empty tables work
-        (an empty parquet dir has no footer to infer from)."""
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(self.path(table))
 
     def snapshot(self, table: str) -> Snapshot | None:
         mpath = os.path.join(self._manifest_dir, f"{table.replace('/', '__')}.json")
@@ -295,52 +286,6 @@ class Catalog:
             for fn in os.listdir(self._manifest_dir)
             if fn.endswith(".json") and not fn.endswith(".log.jsonl")
         )
-
-
-class SnapshotCatalog(Catalog):
-    """Iceberg-table semantics on plain parquet: snapshot isolation,
-    time travel, append, manifest-level dynamic partition overwrite,
-    incremental scan, and snapshot expiry.
-
-    The reference's store is overwrite-in-place SQLite
-    (``src/datastore.py:148-212``); Iceberg (named by the north rule)
-    adds a snapshot log — this class supplies those semantics without
-    the (unavailable offline) ``iceberg-spark-runtime`` jar:
-
-    * every commit writes into a fresh ``<table>/snap-<seq>-<id>/``
-      directory and appends a manifest line to
-      ``_manifests/<table>.log.jsonl``; the commit point is an atomic
-      ``os.replace`` of the ``<table>.json`` pointer (readers never see
-      a half-written snapshot);
-    * a snapshot's ``state`` lists the directories (and partition-
-      subpath exclusions) that make up the table — scan planning is
-      manifest-driven, like Iceberg's manifest lists, so `overwrite`
-      never deletes files and old snapshots stay readable (time travel)
-      until :meth:`expire_snapshots`;
-    * ``replace_partitions`` = Iceberg's dynamic overwrite: the new
-      snapshot masks the replaced partition subtrees of earlier
-      directories via ``exclude`` prefixes and adds the new directory —
-      an idempotent, exactly-once-per-partition commit primitive for
-      resume (SURVEY.md §7.4 risk 7);
-    * ``read_table(..., since=snap)`` is the incremental (CDC-style)
-      scan over directories added by append commits after ``snap``.
-
-    Concurrency contract: all manifest-log mutations (commit appends,
-    publish, and the read-filter-rewrite maintenance paths
-    ``abandon_stage`` / ``expire_snapshots``) serialize on a per-table
-    ``flock`` sidecar (:meth:`_log_lock`), so a commit can never be
-    silently dropped by a concurrent rewrite on the same host.
-    Multiple writers on DIFFERENT hosts against a shared filesystem
-    are out of scope — that coordination belongs to a real catalog
-    service (Hive/REST/Glue), which is exactly what Iceberg's atomic
-    metadata swap delegates to.
-    """
-
-    def exists(self, table: str) -> bool:
-        """Snapshot tables live under snap-* dirs (no parquet at the
-        table root), so presence = a committed pointer manifest; fall
-        back to the flat-layout check for non-snapshot tables."""
-        return self.snapshot(table) is not None or super().exists(table)
 
     # ------------------------------------------------------------ manifests
     def _log_path(self, table: str) -> str:
@@ -1019,10 +964,17 @@ class SnapshotCatalog(Catalog):
             # applies to keys-only eq_deletes entries (they have no
             # partition subtrees; rebuilding them as data entries would
             # resurrect deleted rows AND read key files as rows).
+            # A leaf joins an entry's mask only where that entry's dir
+            # holds the subtree: masking a subtree an immutable entry
+            # lacks changes no read, and per-group resume commits would
+            # otherwise grow every manifest as groups² × routes.
             replaced = set(self._partition_leaves(abs_dir)) | set(replace_leaves or [])
             state = [
                 e if e.get("kind")  # keys-only / DV sidecars: no subtrees
-                else {**e, "exclude": sorted(set(e["exclude"]) | replaced)}
+                else {**e, "exclude": sorted(set(e["exclude"]) | {
+                    leaf for leaf in replaced
+                    if os.path.isdir(os.path.join(self.warehouse, e["dir"], leaf))
+                })}
                 for e in prev.state
             ] + [new_entry]
 
@@ -2966,7 +2918,7 @@ class SnapshotCatalog(Catalog):
             raise ValueError("eq must be (col, value) with a non-null value")
         snap = self._resolve(table, as_of)
         if snap is None or not snap.state:
-            return super().read_table(table, schema=schema)  # non-snapshot table
+            raise LookupError(f"no committed snapshot of table {table!r}")
         if schema is None and snap.schema_json:
             from pyspark.sql.types import StructType
 
@@ -3470,25 +3422,20 @@ class SnapshotCatalog(Catalog):
             partition_by = self._spec_strings(snap.partition_spec)
         elif partition_by == "auto":
             partition_by = self._current_partitioning(snap) or None
-        # live bytes from the snapshot state; a legacy flat-layout table
-        # (empty state) is measured at the table root instead — without
-        # this, live_bytes=0 would repartition(1) a multi-GB table
-        # equality-delete entries are excluded twice over: their bytes
-        # are masks, not rows (sizing), and read_table below applies
-        # them — so compaction MATERIALIZES merge-on-read deletes away
-        # (the new overwrite state carries no delete entries)
-        roots = (
-            [(os.path.join(self.warehouse, e["dir"]), e["exclude"])
-             for e in snap.state if not e.get("kind")]
-            if snap.state
-            else [(self.path(table), [])]
-        )
+        # live bytes from the snapshot state; equality-delete entries
+        # are excluded twice over: their bytes are masks, not rows
+        # (sizing), and read_table below applies them — so compaction
+        # MATERIALIZES merge-on-read deletes away (the new overwrite
+        # state carries no delete entries)
         live_bytes = 0
-        for absdir, excl in roots:
+        for e in snap.state:
+            if e.get("kind"):
+                continue
             # sized through _entry_files so dir- AND file-level masks
             # (replace_partitions / delete_where) both count correctly
             live_bytes += sum(
-                os.path.getsize(f) for f in self._entry_files(absdir, excl)
+                os.path.getsize(f)
+                for f in self._entry_files(os.path.join(self.warehouse, e["dir"]), e["exclude"])
             )
         n_files = max(1, -(-live_bytes // target_file_bytes))  # ceil
         df = self.read_table(table)

@@ -332,7 +332,13 @@ def rrf_fuse(
     no score normalization across heterogeneous scales, which is
     precisely why RRF is the robust default for fusing rankings whose
     raw scores aren't comparable. Plan: the inputs are top-k-sized, so
-    every join and the rank window run on candidate-sized data."""
+    every join and the rank window run on candidate-sized data.
+
+    Precondition: each ranking holds at most one row per
+    ``(query_id, doc_id)`` — a repeated pair would add its term twice.
+    An empty ``rankings`` list raises ``ValueError``."""
+    if not rankings:
+        raise ValueError("no rankings")
     contribs = [
         r.select(
             "query_id", "doc_id",

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog
+from ..catalog import SnapshotCatalog
 from ..operators.sampling import hash_split, pack_sequences
 from ..operators.text import with_text_features
 
@@ -65,7 +65,7 @@ def corpus_stats(curated: DataFrame) -> DataFrame:
 def run_corpus(
     spark: SparkSession,
     docs: DataFrame,
-    catalog: Catalog,
+    catalog: SnapshotCatalog,
     min_quality: float = 0.5,
     max_len: int = 4000,
 ) -> dict[str, int]:
@@ -94,7 +94,7 @@ def run_corpus(
 
 
 def commit_increment(
-    catalog: Catalog,
+    catalog: SnapshotCatalog,
     increment: DataFrame,
     table: str = "corpus",
     n: int = 3,
@@ -120,32 +120,26 @@ def commit_increment(
     the same increment is a no-op (every doc reports
     ``exact_history``; nothing is appended).
 
-    Crash consistency: with a ``SnapshotCatalog`` the three commits
-    are ONE atomic transaction (``catalog.transaction()`` — staged
-    writes, a single commit record, recovery-replayed pointer flips),
-    so readers never observe docs without their index rows. On a plain
-    catalog (no transactions) the write ORDER makes every crash window
-    recoverable instead: writes go docs → bands → index_docs, so a doc
-    present in ``_index_docs`` is guaranteed fully committed
-    everywhere. On entry, any committed doc MISSING from
-    ``_index_docs`` (a pre-transaction crash between the docs commit
-    and the index commits, or a lost index table) is detected and its
-    index rows rebuilt from the committed text before deduping the
+    Crash consistency: the three commits are ONE atomic transaction
+    (``catalog.transaction()`` — staged writes, a single commit record,
+    recovery-replayed pointer flips), so readers never observe docs
+    without their index rows. On entry, any committed doc MISSING from
+    ``_index_docs`` (a lost or rolled-back index table) is detected and
+    its index rows rebuilt from the committed text before deduping the
     increment — without the repair, every later increment would
     silently miss duplicates against those docs. The fast path is a
-    count comparison (index ⊆ corpus holds by write order, so equal
-    counts ⇒ equal id sets — no corpus-wide anti-join per increment);
-    the id-level anti-join runs only when the counts diverge.
+    count comparison (index ⊆ corpus holds because index rows only
+    ever commit with their docs, so equal counts ⇒ equal id sets — no
+    corpus-wide anti-join per increment); the id-level anti-join runs
+    only when the counts diverge.
     """
     from ..operators.dedup import build_dedup_index, increment_dedup_report
 
     if cut_tag is not None:
-        # preflight BEFORE any table advances: a bad tag name, a
-        # duplicate, or a tagless catalog must fail while the commit
-        # is still retryable — failing after the three writes would
-        # leave the increment permanently committed but unpinnable
-        if not hasattr(catalog, "create_tag"):
-            raise ValueError("cut_tag requires a SnapshotCatalog")
+        # preflight BEFORE any table advances: a bad tag name or a
+        # duplicate must fail while the commit is still retryable —
+        # failing after the three writes would leave the increment
+        # permanently committed but unpinnable
         if not catalog._TAG_SHAPE.match(cut_tag) or catalog._ID_SHAPE.match(cut_tag):
             raise ValueError(f"invalid cut_tag {cut_tag!r} (see create_tag)")
         if cut_tag in catalog.tags(table):
@@ -212,23 +206,15 @@ def commit_increment(
         )
         mode = "append" if history is not None else "overwrite"
         lineage = {"stage": "incremental_dedup", "added": n_kept}
-        if hasattr(catalog, "transaction"):
-            # SnapshotCatalog: the three tables advance ATOMICALLY —
-            # readers never see docs without their index rows, and a
-            # crash leaves either nothing or (after recovery) all three
-            with catalog.transaction() as txn:
-                txn.write_table(survivors, table, mode=mode,
-                                lineage=lineage, row_count=n_kept)
-                txn.write_table(new_bands, bands_t, mode=mode, lineage=lineage)
-                txn.write_table(new_docs, docs_t, mode=mode,
-                                lineage=lineage, row_count=n_kept)
-        else:
-            # plain Catalog fallback, recovery-ordered: docs first
-            # (source of truth), index_docs LAST (the commit marker the
-            # entry repair keys on)
-            catalog.write_table(survivors, table, mode=mode, lineage=lineage, row_count=n_kept)
-            catalog.write_table(new_bands, bands_t, mode=mode, lineage=lineage)
-            catalog.write_table(new_docs, docs_t, mode=mode, lineage=lineage, row_count=n_kept)
+        # the three tables advance ATOMICALLY — readers never see docs
+        # without their index rows, and a crash leaves either nothing
+        # or (after recovery) all three
+        with catalog.transaction() as txn:
+            txn.write_table(survivors, table, mode=mode,
+                            lineage=lineage, row_count=n_kept)
+            txn.write_table(new_bands, bands_t, mode=mode, lineage=lineage)
+            txn.write_table(new_docs, docs_t, mode=mode,
+                            lineage=lineage, row_count=n_kept)
     if cut_tag is not None:
         # pin THIS cut's exact corpus snapshot: the dataset built from
         # it stays reproducible through expiry/compaction/orphan sweeps

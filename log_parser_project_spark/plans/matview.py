@@ -211,14 +211,6 @@ def _definition(
     )
 
 
-def _require_snapshot_catalog(catalog) -> None:
-    if not isinstance(catalog, SnapshotCatalog):
-        raise ValueError(
-            "materialized views need a SnapshotCatalog (the refresh "
-            "reads the base table's changelog between snapshots)"
-        )
-
-
 def _ensure_pin_tag(
     catalog: SnapshotCatalog, view: str, base_table: str, pin: str
 ) -> bool:
@@ -333,7 +325,6 @@ def create_matview(
     counts LIVE BASE ROWS through the whole lattice rather than delta
     rows. Day → month → year rollup chains stay O(delta) end to
     end."""
-    _require_snapshot_catalog(catalog)
     sums = dict(sums or {})
     tspec = _norm_transform(transform)
     if view == base_table:
@@ -467,7 +458,6 @@ def refresh_matview(catalog: SnapshotCatalog, view: str) -> Snapshot | None:
     never a double-applied delta. On success the base-table pin tag
     moves forward so retention sweeps can't expire the changelog
     window the NEXT refresh needs."""
-    _require_snapshot_catalog(catalog)
     mv, view_snap = _definition(catalog, view)
     base_table = mv["base_table"]
     base_snap = catalog.snapshot(base_table)
@@ -571,7 +561,6 @@ def read_matview(
     a pinned state — data AND definition resolved at that commit — so
     multi-view readers can take a consistent cut that a concurrent
     refresh cannot shear (see ``plans/searchindex.py``)."""
-    _require_snapshot_catalog(catalog)
     mv, view_snap = _definition(catalog, view, as_of=as_of)
     return _netted_read(catalog, view, mv, view_snap, as_of=as_of)
 
@@ -584,7 +573,6 @@ def matview_status(catalog: SnapshotCatalog, view: str) -> dict:
     committed chain (expired intermediates or a rollback) — refresh
     still works via the changelog's net endpoint diff as long as the
     pin tag keeps the snapshot alive, but lag can't be counted."""
-    _require_snapshot_catalog(catalog)
     mv, _ = _definition(catalog, view)
     hist = catalog.history(mv["base_table"])
     pos = {s.snapshot_id: i for i, s in enumerate(hist)}
@@ -608,7 +596,6 @@ def compact_matview(catalog: SnapshotCatalog, view: str) -> Snapshot:
     Serializable: the overwrite requires the view head it consolidated
     FROM (a refresh landing mid-compact raises :class:`CommitConflict`
     instead of having its delta silently discarded)."""
-    _require_snapshot_catalog(catalog)
     mv, view_snap = _definition(catalog, view)
     netted = _pad_to_schema(read_matview(catalog, view), view_snap)
     return catalog.write_table(

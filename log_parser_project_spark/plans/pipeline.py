@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog
+from ..catalog import SnapshotCatalog
 from ..metrics import dump, get_safe, observed
 from ..operators.aggregate import per_sink_aggregates_onepass
 from ..operators.enrich import apply_enums, derive_metrics, enrich
@@ -120,21 +120,17 @@ def build_routed(
     return df.select(*sink_columns(patterns))
 
 
-def read_sink(catalog: Catalog, sink: str, ts_range: tuple | None = None) -> DataFrame:
+def read_sink(catalog: SnapshotCatalog, sink: str, ts_range: tuple | None = None) -> DataFrame:
     """A logical sink = one route partition of the staging table.
 
     ``ts_range=(lo, hi)`` (ISO strings or datetimes, a naive one in the
     session time zone; either bound None; both inclusive)
-    narrows to a time window: on a SnapshotCatalog the manifest ts
-    stats prune whole files at planning time (the commit records
-    per-file min/max), and the row-level filter on top keeps the result
-    exact either way."""
-    from ..catalog import SnapshotCatalog
-
-    if ts_range is not None and isinstance(catalog, SnapshotCatalog):
-        df = catalog.read_table(STAGING_TABLE, predicate=("ts", *ts_range))
-    else:
-        df = catalog.read_table(STAGING_TABLE)
+    narrows to a time window: the manifest ts stats prune whole files
+    at planning time (the commit records per-file min/max), and the
+    row-level filter on top keeps the result exact."""
+    df = catalog.read_table(
+        STAGING_TABLE, predicate=None if ts_range is None else ("ts", *ts_range)
+    )
     df = df.filter(F.col("route") == sink)
     if ts_range is not None:
         lo, hi = ts_range
@@ -148,25 +144,19 @@ def read_sink(catalog: Catalog, sink: str, ts_range: tuple | None = None) -> Dat
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
-    catalog: Catalog,
+    catalog: SnapshotCatalog,
     metrics_path: str | None = None,
     write_repeats: bool = True,
     patterns: tuple[Pattern, ...] = PATTERNS,
     audit=None,
 ) -> PipelineResult:
-    """``audit`` opts the fan-out commit into write-audit-publish
-    (SnapshotCatalog only): the staging write lands STAGED (readers
-    keep the previous state), the audit callable — ``True`` for
-    :func:`default_audit` — runs against the staged snapshot, and the
-    commit publishes only when it returns no violations; otherwise the
-    stage is abandoned (targeted dir cleanup) and :class:`AuditError`
-    raises. A bad batch can then never poison 100 TB of downstream
+    """``audit`` opts the fan-out commit into write-audit-publish: the
+    staging write lands STAGED (readers keep the previous state), the
+    audit callable — ``True`` for :func:`default_audit` — runs against
+    the staged snapshot, and the commit publishes only when it returns
+    no violations; otherwise the stage is abandoned (targeted dir
+    cleanup) and :class:`AuditError` raises. A bad batch can then never poison 100 TB of downstream
     readers — they see the last good snapshot throughout."""
-    from ..catalog import SnapshotCatalog
-
-    if audit is not None and not isinstance(catalog, SnapshotCatalog):
-        raise ValueError("audit (write-audit-publish) requires a SnapshotCatalog")
-
     routed, obs = observed(
         build_routed(spark, transcripts, patterns=patterns)
     )
@@ -187,11 +177,8 @@ def run_pipeline(
         row_count=lambda: int(get_safe(obs).get("rows_total") or 0),
         # manifest ts stats (footer metadata only) so time-windowed
         # sink reads can skip whole files at planning time
-        **(
-            {"stats_cols": ["ts"], "staged": audit is not None}
-            if isinstance(catalog, SnapshotCatalog)
-            else {}
-        ),
+        stats_cols=["ts"],
+        staged=audit is not None,
     )
     if audit is not None:
         check = default_audit if audit is True else audit

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import Catalog
+from .catalog import SnapshotCatalog
 from .plans.pipeline import STAGING_TABLE
 from .registry import dim_patterns_df
 
@@ -70,7 +70,7 @@ def search_patterns(spark: SparkSession, term: str) -> DataFrame:
     ).select("pattern_class", "version", "route", "groups")
 
 
-def sink_summary(catalog: Catalog) -> DataFrame:
+def sink_summary(catalog: SnapshotCatalog) -> DataFrame:
     """Per-sink row/conversation summary over the routed staging table
     (the 'what landed where' operational query)."""
     staging = catalog.read_table(STAGING_TABLE)

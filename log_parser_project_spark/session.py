@@ -17,6 +17,7 @@ harness so that every run gets identical, deliberately-chosen configs:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -28,27 +29,40 @@ DEFAULT_PARALLELISM = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8
 
 def _package_zip() -> str:
     """Zip this package so executors can import it — the programmatic
-    equivalent of ``spark-submit --py-files dist/engine.zip``."""
+    equivalent of ``spark-submit --py-files dist/engine.zip``.
+
+    The zip is named by a hash of the zipped paths and contents, so
+    every version of the source gets its own file: a process or
+    checkout zipping different source can never replace the zip a
+    running session registered with ``addPyFile``. An existing zip of
+    the same version is reused as is."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    out = os.path.join(tempfile.gettempdir(), f"{pkg_name}.zip")
-    # build in a unique temp file, then atomically rename into place:
-    # the path is SHARED across python processes (every session and
-    # spark-submit child zips to the same name), and a concurrent
-    # session re-zipping in place while this session's Spark copies
-    # the file to its work dir hands the executor a truncated zip
+    sources = sorted(
+        (os.path.join(pkg_name, os.path.relpath(os.path.join(root, fn), pkg_dir)),
+         os.path.join(root, fn))
+        for root, _dirs, files in os.walk(pkg_dir)
+        if "__pycache__" not in root
+        for fn in files
+        if fn.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for rel, full in sources:
+        digest.update(rel.encode() + b"\0")
+        with open(full, "rb") as f:
+            digest.update(f.read() + b"\0")
+    out = os.path.join(tempfile.gettempdir(), f"{pkg_name}-{digest.hexdigest()[:16]}.zip")
+    if os.path.exists(out):
+        return out
+    # build in a unique temp file, then atomically rename into place, so
+    # a concurrent session zipping the same version never hands its
+    # executors a truncated zip
     fd, tmp = tempfile.mkstemp(suffix=".zip", dir=tempfile.gettempdir())
     os.close(fd)
     try:
         with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
+            for rel, full in sources:
+                zf.write(full, rel)
         os.replace(tmp, out)
     except BaseException:
         try:

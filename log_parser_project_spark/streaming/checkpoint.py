@@ -11,11 +11,14 @@ an idempotent unit, and records one lineage manifest per group::
     {group_id, job_id, input_fingerprint, row_count, matched,
      output_commit, status: done, wall_s}
 
-On resume, groups with a ``done`` manifest are skipped; a group that
-crashed mid-write is simply re-run — its output directory is
-overwritten atomically per group (the parquet stand-in for Iceberg's
-``overwritePartitions``), so the rerun cannot double-write. This is
-exactly-once per group end-to-end.
+Every group commits to ONE snapshot table (``GROUPS_TABLE``,
+partitioned by ``(group, route)``) as a ``replace_partitions`` snapshot
+that masks the table's earlier ``group=<g>`` subtree — Iceberg's
+dynamic ``overwritePartitions``. On resume, groups with a ``done``
+manifest are skipped; a group that crashed after its commit but before
+its manifest is simply re-run, and its re-commit replaces the earlier
+one, so the rerun cannot double-write. This is exactly-once per group
+end-to-end.
 
 At 100 TB the group count is chosen so one group ≈ a few hundred GB —
 big enough to amortize job overhead, small enough that a retry is
@@ -32,7 +35,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog
+from ..catalog import SnapshotCatalog
 from ..metrics import get_safe, observed
 from ..plans.pipeline import build_routed
 
@@ -43,7 +46,7 @@ class CheckpointedPipeline:
     def __init__(
         self,
         spark: SparkSession,
-        catalog: Catalog,
+        catalog: SnapshotCatalog,
         n_groups: int = 8,
         job_id: str = "default",
         patterns=None,
@@ -107,16 +110,15 @@ class CheckpointedPipeline:
             t0 = time.time()
             part = grouped.filter(F.col("_group") == g).drop("_group")
             routed, obs = observed(build_routed(self.spark, part, patterns=self.patterns))
-            out = routed.withColumn("day", F.to_date("ts")).repartition("route")
-            # per-group atomic overwrite IS the commit mechanism here
-            # (exactly-once per group); use the base flat layout even on a
-            # SnapshotCatalog — read_output partition-discovers the whole
-            # group=*/route=* tree, which snapshot subdirs would break
-            snap = Catalog.write_table(
-                self.catalog,
-                out,
-                f"{GROUPS_TABLE}/group={g}",
-                partition_by=["route"],
+            out = routed.withColumns({"day": F.to_date("ts"), "group": F.lit(g)})
+            snap = self.catalog.write_table(
+                out.repartition("route"),
+                GROUPS_TABLE,
+                mode="replace_partitions",
+                partition_by=["group", "route"],
+                # an empty rerun writes no leaf; the explicit one still
+                # masks the group's earlier rows
+                replace_leaves=[f"group={g}"],
                 lineage={"stage": "checkpointed_fan_out", "group": g, "job": self.job_id},
                 row_count=lambda: int(get_safe(obs).get("rows_total") or 0),
             )
@@ -141,7 +143,5 @@ class CheckpointedPipeline:
         return {"processed": processed, "skipped": skipped}
 
     def read_output(self) -> DataFrame:
-        """Union of all committed groups (partition-discovered)."""
-        return self.spark.read.option("basePath", self.catalog.path(GROUPS_TABLE)).parquet(
-            self.catalog.path(GROUPS_TABLE)
-        )
+        """Union of all committed groups."""
+        return self.catalog.read_table(GROUPS_TABLE)

@@ -2,8 +2,9 @@
 
 ``readStream`` over a parquet directory of transcripts → the same
 narrow parse→enrich→route plan (the pandas-UDF extract works
-unchanged under micro-batching) → ``foreachBatch`` fan-out append with
-Spark's own checkpoint log providing exactly-once per micro-batch.
+unchanged under micro-batching) → ``foreachBatch`` commits of each
+micro-batch as a ``replace_partitions`` snapshot, which with Spark's own
+checkpoint log gives exactly-once per micro-batch.
 ``trigger(availableNow=True)`` drains whatever has landed and stops —
 the incremental-batch shape the reference approximates with its resume
 loop (``ultra_light_parser.py:144-179``).
@@ -20,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import Catalog
+from ..catalog import SnapshotCatalog
 from ..plans.pipeline import build_routed
 
 TRANSCRIPT_SCHEMA = T.StructType([
@@ -33,25 +34,29 @@ TRANSCRIPT_SCHEMA = T.StructType([
 ])
 
 
-def batch_sink(spark: SparkSession, catalog: Catalog, table: str):
+def batch_sink(spark: SparkSession, catalog: SnapshotCatalog, table: str):
     """foreachBatch sink, idempotent under micro-batch re-delivery.
 
     ``foreachBatch`` + plain append is only at-least-once: a crash
     after the write but before the checkpoint commit re-delivers the
-    same ``batch_id``, double-appending. Writing each batch into its
-    own ``batch=<id>/`` subtree with *overwrite* makes re-delivery a
-    no-op rewrite of the same directory — exactly-once end to end with
-    no transaction log (the per-batch analog of the checkpointed
-    pipeline's per-group overwrite).
+    same ``batch_id``, double-appending. Committing each batch as a
+    ``replace_partitions`` snapshot of its own ``batch=<id>`` subtree
+    makes re-delivery replace the earlier commit of that batch —
+    exactly-once end to end (the per-batch analog of the checkpointed
+    pipeline's per-group replace).
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        routed = build_routed(spark, batch_df).withColumn("day", F.to_date("ts"))
-        (
-            routed.repartition("route")
-            .write.mode("overwrite")
-            .partitionBy("route", "day")
-            .parquet(f"{catalog.path(table)}/batch={batch_id}")
+        routed = build_routed(spark, batch_df).withColumns(
+            {"day": F.to_date("ts"), "batch": F.lit(batch_id).cast("long")}
+        )
+        catalog.write_table(
+            routed.repartition("route"),
+            table,
+            mode="replace_partitions",
+            partition_by=["batch", "route", "day"],
+            replace_leaves=[f"batch={batch_id}"],
+            lineage={"stage": "stream_fan_out", "stream_batch_id": batch_id},
         )
 
     return sink
@@ -60,7 +65,7 @@ def batch_sink(spark: SparkSession, catalog: Catalog, table: str):
 def stream_pipeline(
     spark: SparkSession,
     input_dir: str,
-    catalog: Catalog,
+    catalog: SnapshotCatalog,
     checkpoint_dir: str,
     table: str = "stream_staging",
 ):
@@ -98,9 +103,9 @@ def upsert_sink(
     lineage, and a re-delivered micro-batch (crash after the table
     commit but before the stream checkpoint advanced) sees its own id
     on the table pointer and skips — no duplicate snapshot, no
-    double-apply. Requires a ``SnapshotCatalog``; the batch frame must
-    be key-unique on ``keys`` (dropDuplicates upstream if the source
-    can repeat keys within one batch).
+    double-apply. The batch frame must be key-unique on ``keys``
+    (dropDuplicates upstream if the source can repeat keys within one
+    batch).
 
     When ``partition_by`` ⊆ ``keys`` the merge rewrites only the
     partitions the batch touches (copy-on-write at partition

@@ -3,7 +3,7 @@
 * crash between groups → resume skips done groups, final output equals
   a single-shot run (no dupes, no gaps)
 * crash mid-group (output written, manifest missing) → rerun
-  overwrites the partial group exactly once
+  replaces the group's partition exactly once
 * availableNow streaming drains incrementally with exactly-once counts
   across two file drops
 """
@@ -13,7 +13,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from log_parser_project_spark.catalog import Catalog
+from log_parser_project_spark.catalog import SnapshotCatalog
 from log_parser_project_spark.generate import make_transcripts
 from log_parser_project_spark.plans.pipeline import build_routed
 from log_parser_project_spark.streaming.checkpoint import CheckpointedPipeline
@@ -30,7 +30,7 @@ def _route_counts(df):
 
 
 def test_resume_after_crash_no_dupes_no_gaps(spark, transcripts_small, warehouse):
-    cat = Catalog(spark, warehouse)
+    cat = SnapshotCatalog(spark, warehouse)
     cp = CheckpointedPipeline(spark, cat, n_groups=6, job_id="t1")
 
     with pytest.raises(RuntimeError, match="simulated crash"):
@@ -53,7 +53,11 @@ def test_resume_after_crash_no_dupes_no_gaps(spark, transcripts_small, warehouse
 
 
 def test_midgroup_crash_rerun_overwrites_partial(spark, transcripts_small, warehouse):
-    cat = Catalog(spark, warehouse)
+    from pyspark.sql import types as T
+
+    from log_parser_project_spark.streaming.checkpoint import GROUPS_TABLE
+
+    cat = SnapshotCatalog(spark, warehouse)
     cp = CheckpointedPipeline(spark, cat, n_groups=4, job_id="t2")
     cp.run(transcripts_small)
     want = _route_counts(cp.read_output())
@@ -63,19 +67,35 @@ def test_midgroup_crash_rerun_overwrites_partial(spark, transcripts_small, wareh
     os.remove(cp._manifest_path(2))
     res = cp.run(transcripts_small)
     assert res["processed"] == [2]
-    assert _route_counts(cp.read_output()) == want  # overwrite, not append
+    out = cp.read_output()
+    assert _route_counts(out) == want  # replace, not append
+    assert out.schema["group"].dataType == T.IntegerType()
+
+    # the re-run masks group 2 only in the entry that holds it: no
+    # entry carries a mask for a group it does not hold, so the
+    # manifest grows with the commits, not with groups² × routes
+    state = cat.snapshot(GROUPS_TABLE).state
+    assert len(state) == 5  # groups 0..3, then group 2 again
+    for e in state:
+        held = {
+            d for d in os.listdir(os.path.join(cat.warehouse, e["dir"]))
+            if d.startswith("group=")
+        }
+        assert {x.split("/")[0] for x in e["exclude"]} <= held, e
+    assert "group=2" in state[2]["exclude"]
+    assert [e["exclude"] for i, e in enumerate(state) if i != 2] == [[], [], [], []]
 
 
 def test_stream_available_now_exactly_once(spark, tmp_path):
     input_dir = str(tmp_path / "in")
     wh = str(tmp_path / "wh")
     ckpt = str(tmp_path / "ckpt")
-    cat = Catalog(spark, wh)
+    cat = SnapshotCatalog(spark, wh)
 
     batch1 = make_transcripts(spark, n_convs=40)
     batch1.write.mode("append").parquet(input_dir)
     stream_pipeline(spark, input_dir, cat, ckpt)
-    out1 = spark.read.parquet(cat.path("stream_staging"))
+    out1 = cat.read_table("stream_staging")
     n1 = out1.count()
     assert n1 == batch1.count()
 
@@ -83,14 +103,14 @@ def test_stream_available_now_exactly_once(spark, tmp_path):
     batch2 = make_transcripts(spark, n_convs=80).filter(F.col("conv_id") > "conv-00000039")
     batch2.write.mode("append").parquet(input_dir)
     stream_pipeline(spark, input_dir, cat, ckpt)
-    out2 = spark.read.parquet(cat.path("stream_staging"))
+    out2 = cat.read_table("stream_staging")
     assert out2.count() == n1 + batch2.count()
     # no duplicates: (conv_id, turn_idx) unique
     assert out2.select("conv_id", "turn_idx").distinct().count() == out2.count()
 
     # re-drain with nothing new: no change
     stream_pipeline(spark, input_dir, cat, ckpt)
-    assert spark.read.parquet(cat.path("stream_staging")).count() == n1 + batch2.count()
+    assert cat.read_table("stream_staging").count() == n1 + batch2.count()
 
 
 def test_watermarked_windowed_counts(spark, tmp_path):
@@ -139,19 +159,19 @@ def test_watermarked_windowed_counts(spark, tmp_path):
 def test_stream_batch_redelivery_is_idempotent(spark, transcripts_small, warehouse):
     """foreachBatch re-delivery of the same batch_id (crash between
     write and checkpoint commit) must not double-write: the batch=<id>
-    overwrite makes the retry a no-op rewrite."""
+    partition replace makes the retry replace its earlier commit."""
     from log_parser_project_spark.streaming.stream import batch_sink
 
-    cat = Catalog(spark, warehouse)
+    cat = SnapshotCatalog(spark, warehouse)
     sink = batch_sink(spark, cat, "stream_staging")
     sink(transcripts_small, 7)
-    n1 = spark.read.parquet(cat.path("stream_staging")).count()
+    n1 = cat.read_table("stream_staging").count()
     sink(transcripts_small, 7)  # re-delivered micro-batch
-    out = spark.read.parquet(cat.path("stream_staging"))
+    out = cat.read_table("stream_staging")
     assert out.count() == n1 == transcripts_small.count()
     assert out.select("conv_id", "turn_idx").distinct().count() == n1
     sink(transcripts_small.limit(10), 8)  # a NEW batch appends
-    assert spark.read.parquet(cat.path("stream_staging")).count() == n1 + 10
+    assert cat.read_table("stream_staging").count() == n1 + 10
 
 
 def test_r4_stream_query_leaves_no_residual_views(spark, sf_dir):

@@ -5,6 +5,8 @@ import json
 import subprocess
 import sys
 
+import pytest
+
 
 def _run(*args: str) -> str:
     r = subprocess.run(
@@ -299,6 +301,30 @@ def test_cli_vectorindex_lifecycle(spark, tmp_path):
     assert r.returncode == 2 and "not in base table" in r.stderr
 
 
+def test_cli_vectorindex_query_id_leaves_no_cached_frame(spark, tmp_path, capsys):
+    """--query-id persists the looked-up query rows; both the answer and
+    the exit-2 (unknown id) paths must unpersist them, or every
+    in-process call leaks a cached frame."""
+    from log_parser_project_spark.__main__ import main
+    from log_parser_project_spark.catalog import SnapshotCatalog
+
+    wh = str(tmp_path / "whq")
+    SnapshotCatalog(spark, wh).write_table(
+        spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])],
+            "vec_id long, embedding array<float>",
+        ),
+        "vecs",
+    )
+    base = ["vectorindex", "--warehouse", wh, "--index", "vidx"]
+    assert main(base + ["--create-over", "vecs", "--cells", "1"]) == 0
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert main(base + ["--query-id", "1", "--k", "1"]) == 0
+    assert main(base + ["--query-id", "99"]) == 2
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    capsys.readouterr()
+
+
 def test_cli_vectorindex_string_id_column(spark, tmp_path):
     """--query-id works against a STRING id column: the lookup compares
     through a string cast instead of an int-typed isin (which silently
@@ -322,20 +348,26 @@ def test_cli_vectorindex_string_id_column(spark, tmp_path):
     assert [r["neighbor_id"] for r in out["results"]] == ["b"]
 
 
-def test_table_to_table_example_runs_end_to_end():
+@pytest.mark.parametrize("script, marker", [
+    pytest.param("table_to_table.py", "still row-identical after the correction",
+                 id="table_to_table"),
+    pytest.param("stream_ingest.py", "re-sent rows replaced (key-unique)",
+                 id="stream_ingest"),
+])
+def test_table_to_table_example_runs_end_to_end(script, marker):
     """The examples/ runbooks are user-facing API demos that pytest
-    otherwise never executes — this one reconciles a CDC-maintained
-    mirror against its source with positional set ops, which caught a
-    real changelog column-order regression; keep it permanently
-    covered. (The others exercise surfaces the suite already drives.)"""
+    otherwise never executes — table_to_table reconciles a
+    CDC-maintained mirror against its source with positional set ops,
+    which caught a real changelog column-order regression; stream_ingest
+    drives the streaming sink's per-batch snapshot commits through
+    three drains. Keep both permanently covered. (The others exercise
+    surfaces the suite already drives.)"""
     import os
-    import subprocess
-    import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     r = subprocess.run(
-        [sys.executable, os.path.join(repo, "examples", "table_to_table.py")],
+        [sys.executable, os.path.join(repo, "examples", script)],
         cwd=repo, capture_output=True, text=True, timeout=420,
     )
     assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "still row-identical after the correction" in r.stdout
+    assert marker in r.stdout

@@ -159,7 +159,7 @@ def test_pipeline_from_registry_json(spark, tmp_path):
     WHOLE pipeline — sinks, enum columns, repeats — with no code."""
     import json
 
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.plans.pipeline import read_sink, run_pipeline
     from log_parser_project_spark.registry import registry_from_json
 
@@ -197,19 +197,19 @@ def test_pipeline_from_registry_json(spark, tmp_path):
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
     ).withColumn("ts", F.lit("2026-01-01 00:00:00").cast("timestamp"))
 
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     res = run_pipeline(spark, tdf, cat, patterns=patterns)
     assert res.sink_counts == {"sink_status": 1, "sink_alloc": 1, "sink_unmatched": 1}
     st = read_sink(cat, "sink_status").collect()
     assert st[0].pct_friendly == "almost"
-    recs = spark.read.parquet(cat.path("sink_repeat_records")).collect()
+    recs = cat.read_table("sink_repeat_records").collect()
     assert {(r.field1_value, r.field2_value) for r in recs} == {("cpu", "4"), ("mem", "16")}
 
 
 def test_pipeline_with_repeat_free_registry(spark, tmp_path):
     """A registry with no repeat groups must skip the repeats sink
     (regression: empty isin() from zero repeat routes)."""
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.plans.pipeline import run_pipeline
 
     patterns = (CUSTOM[0],)  # status v1 only — no repeat_group
@@ -217,7 +217,7 @@ def test_pipeline_with_repeat_free_registry(spark, tmp_path):
         [("c1", 1, "user", "STATUS op=x pct=1", None)],
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.lit("2026-01-01 00:00:00").cast("timestamp"))
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     res = run_pipeline(spark, tdf, cat, patterns=patterns)
     assert res.sink_counts == {"sink_status": 1, "sink_unmatched": 0}
     import os
@@ -227,7 +227,7 @@ def test_pipeline_with_repeat_free_registry(spark, tmp_path):
 def test_checkpointed_pipeline_honors_custom_registry(spark, tmp_path):
     """--checkpointed must parse with the SUPPLIED registry (regression:
     it silently used the default registry and quarantined everything)."""
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.streaming.checkpoint import CheckpointedPipeline
 
     tdf = spark.createDataFrame(
@@ -235,7 +235,7 @@ def test_checkpointed_pipeline_honors_custom_registry(spark, tmp_path):
          ("c2", 1, "user", "junk", None)],
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.lit("2026-01-01 00:00:00").cast("timestamp"))
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     cp = CheckpointedPipeline(
         spark, cat, n_groups=2, job_id="t", patterns=(CUSTOM[0],)
     )

@@ -817,11 +817,11 @@ def test_increment_lsh_path_vs_exact_on_fixture(docs):
 def test_commit_increment_accumulates_and_recommit_adds_nothing_kept(
     spark, docs, tmp_path
 ):
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.operators.sampling import hash_bucket
     from log_parser_project_spark.plans.corpus import commit_increment
 
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     b = hash_bucket(F.col("doc_id"), 2)
     inc0, inc1 = docs.filter(b == 0), docs.filter(b == 1)
 
@@ -856,11 +856,11 @@ def test_commit_increment_repairs_missing_index_rows(spark, docs, tmp_path):
     committed docs with lost index rows must be re-indexed on the next
     increment, so duplicates against them are still caught (without the
     repair they would silently be re-kept)."""
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.operators.sampling import hash_bucket
     from log_parser_project_spark.plans.corpus import commit_increment
 
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     inc0 = docs.filter(hash_bucket(F.col("doc_id"), 2) == 0)
     r0 = commit_increment(cat, inc0)
     kept0 = {r.doc_id for r in r0.filter(F.col("status") == "kept").collect()}
@@ -894,22 +894,26 @@ def test_commit_increment_repairs_missing_index_rows(spark, docs, tmp_path):
 
 
 def test_commit_increment_rebuilds_lost_index_tables(spark, docs, tmp_path):
-    """Total index loss (crash before the FIRST index commit, or a
-    deleted derived table): the whole index is rebuilt from the
-    committed corpus — the corpus is the source of truth."""
+    """Total index loss (deleted derived tables): the whole index is
+    rebuilt from the committed corpus — the corpus is the source of
+    truth."""
+    import os
     import shutil
 
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.operators.sampling import hash_bucket
     from log_parser_project_spark.plans.corpus import commit_increment
 
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     inc0 = docs.filter(hash_bucket(F.col("doc_id"), 2) == 0)
     r0 = commit_increment(cat, inc0)
     kept0 = {r.doc_id for r in r0.filter(F.col("status") == "kept").collect()}
 
-    shutil.rmtree(cat.path("corpus_index_docs"))
-    shutil.rmtree(cat.path("corpus_index_bands"))
+    # lose the index tables whole: data dirs, pointers and logs
+    for t in ("corpus_index_docs", "corpus_index_bands"):
+        shutil.rmtree(cat.path(t))
+        os.remove(os.path.join(cat.warehouse, "_manifests", f"{t}.json"))
+        os.remove(os.path.join(cat.warehouse, "_manifests", f"{t}.log.jsonl"))
 
     r1 = commit_increment(cat, inc0)
     statuses = {r.doc_id: r.status for r in r1.collect()}
@@ -1037,12 +1041,6 @@ def test_commit_increment_cut_tag_pins_the_cut(spark, docs, tmp_path):
     assert cat.read_table("corpus", as_of="cut-day0").count() == kept0
     assert cat.read_table("corpus", as_of="cut-day1").count() == \
         cat.read_table("corpus").count()
-    # plain Catalog has no tags: loud error, not a silent skip
-    from log_parser_project_spark.catalog import Catalog
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="SnapshotCatalog"):
-        commit_increment(Catalog(spark, str(tmp_path / "wh2")), inc0,
-                         cut_tag="cut-x")
 
 
 # ---------------------------------------------------------------------------

@@ -10,7 +10,7 @@ recompute over the base's current state.
 import pytest
 from pyspark.sql import functions as F
 
-from log_parser_project_spark.catalog import Catalog, SnapshotCatalog
+from log_parser_project_spark.catalog import SnapshotCatalog
 from log_parser_project_spark.plans.matview import (
     compact_matview,
     create_matview,
@@ -162,13 +162,6 @@ def test_status_lag_counts_base_commits(spark, cat):
     assert st["lag_commits"] == 2 and st["fresh"] is False
     refresh_matview(cat, "mv")
     assert matview_status(cat, "mv")["lag_commits"] == 0
-
-
-def test_plain_catalog_rejected(spark, tmp_path):
-    plain = Catalog(spark, str(tmp_path / "plain"))
-    plain.write_table(_rows(spark, range(1, 4)), "base")
-    with pytest.raises(ValueError, match="SnapshotCatalog"):
-        create_matview(plain, "mv", "base", ["g"])
 
 
 def test_non_matview_table_rejected(spark, cat):

@@ -6,7 +6,7 @@ prunes.
 
 import pyspark.sql.functions as F
 
-from log_parser_project_spark.catalog import Catalog
+from log_parser_project_spark.catalog import SnapshotCatalog
 from log_parser_project_spark.generate import make_transcripts
 from log_parser_project_spark.plans.pipeline import STAGING_TABLE, build_routed, read_sink, run_pipeline
 from log_parser_project_spark.contract import ordered_queries
@@ -59,7 +59,7 @@ def test_parse_udf_evaluated_once(spark):
 
 
 def test_sink_read_prunes_partitions(spark, transcripts_small, tmp_path):
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     run_pipeline(spark, transcripts_small, cat, write_repeats=False)
     plan = _plan(read_sink(cat, "sink_errors").select("conv_id"))
     # partition filter on the route= directory level, not a data filter
@@ -144,9 +144,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     and results equal the plain join."""
     import pyspark.sql.functions as F
 
-    from log_parser_project_spark.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     c = spark.read.parquet(f"{sf_dir}/customer.parquet").withColumn(
         "o_custkey", F.col("c_custkey")

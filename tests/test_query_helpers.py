@@ -27,10 +27,10 @@ def test_search(spark):
 
 
 def test_sink_summary(spark, transcripts_small, tmp_path):
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
     from log_parser_project_spark.plans.pipeline import run_pipeline
 
-    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     res = run_pipeline(spark, transcripts_small, cat, write_repeats=False)
     summary = {r.route: r.n_rows for r in qh.sink_summary(cat).collect()}
     assert summary == {k: v for k, v in res.sink_counts.items() if v > 0}

@@ -322,3 +322,10 @@ def test_rrf_fuse_arithmetic_and_outer_semantics(spark):
         [(0, 1, 1), (1, 2, 1)], "query_id long, doc_id long, rank long")
     out = rrf_fuse([two_q], k=1).collect()
     assert {(r.query_id, r.doc_id, r.rank) for r in out} == {(0, 1, 1), (1, 2, 1)}
+
+
+def test_rrf_fuse_rejects_no_rankings():
+    from log_parser_project_spark.operators.search import rrf_fuse
+
+    with pytest.raises(ValueError, match="no rankings"):
+        rrf_fuse([])

@@ -234,10 +234,10 @@ def test_write_bucketed_refuses_rmtree_inside_warehouse(spark, tmp_path):
 
     import pytest as _pytest
 
-    from log_parser_project_spark.catalog import Catalog
+    from log_parser_project_spark.catalog import SnapshotCatalog
 
     wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
-    cat = Catalog(spark, os.path.dirname(wh.rstrip("/")) or wh)
+    cat = SnapshotCatalog(spark, os.path.dirname(wh.rstrip("/")) or wh)
     # simulate a stale managed location under the catalog warehouse
     loc = os.path.join(wh, "bkt_guard_tbl")
     os.makedirs(loc, exist_ok=True)
@@ -953,16 +953,6 @@ def test_pipeline_audit_gate_abandons_bad_batch(spark, transcripts_small, tmp_pa
     # readers still see the last good snapshot; the stage is gone
     assert cat.snapshot(STAGING_TABLE).snapshot_id == good.staging_snapshot
     assert cat.remove_orphan_files(STAGING_TABLE, older_than_s=0, sweep_staged=True) == []
-
-
-def test_pipeline_audit_requires_snapshot_catalog(spark, transcripts_small, tmp_path):
-    from log_parser_project_spark.catalog import Catalog
-    from log_parser_project_spark.plans.pipeline import run_pipeline
-
-    with pytest.raises(ValueError, match="SnapshotCatalog"):
-        run_pipeline(
-            spark, transcripts_small, Catalog(spark, str(tmp_path / "wh")), audit=True
-        )
 
 
 def test_rollback_rejects_staged_snapshot(spark, cat):
