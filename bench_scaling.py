@@ -13,7 +13,9 @@ sequential phases (measured 35.5 → 21.9 Mops in one run), and a
 single sequential pass puts that whole shift into the efficiency
 number, leaving the normalization to repair what pairing-at-equal-
 clock-state simply avoids. Every pair is reported (JSON + md) so the
-headline choice is auditable.
+headline choice is auditable, and the ≥ 0.8 verdict needs both the
+headline pair's clock-normalized efficiency and the median over all
+pairs to reach the bar (both are printed).
 
 Prints a JSON summary and (with ``--write-md``) records it in
 ``BENCH/BASELINE.md``. Efficiency = throughput_4N / (4 × throughput_N).
@@ -40,6 +42,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -284,6 +287,7 @@ def main() -> None:
                 "clock_mismatch": round(abs(math.log(ratio)), 4),
             })
     best = min(pairs, key=lambda p: p["clock_mismatch"])
+    median_norm = round(statistics.median(p["efficiency_clock_normalized"] for p in pairs), 3)
     summary = {
         "metric": "scaling efficiency N->4N (turns/sec, parse->route->aggregate)",
         "n_cores": n, "n4_cores": n4,
@@ -293,13 +297,20 @@ def main() -> None:
             "spin_mops_n", "spin_mops_4n", "clock_ratio_n_over_4n",
             "efficiency", "efficiency_clock_normalized",
         )},
+        "median_efficiency_clock_normalized": median_norm,
         # gate on the best-clock-matched pair's normalized figure (at a
         # matched clock the normalization is a small correction, not a
-        # repair); all pairs are in the JSON for audit
-        "pass": best["efficiency_clock_normalized"] >= 0.8,
+        # repair) AND on the median over all pairs, so one lucky pair
+        # cannot carry the verdict; all pairs are in the JSON for audit
+        "pass": best["efficiency_clock_normalized"] >= 0.8 and median_norm >= 0.8,
         "pairs": pairs,
     }
     print(json.dumps(summary))
+    print(
+        f"# gate (both >= 0.8): best-clock-matched pair {best['efficiency_clock_normalized']}, "
+        f"median of {len(pairs)} pairs {median_norm} -> {'pass' if summary['pass'] else 'FAIL'}",
+        file=sys.stderr,
+    )
 
     if args.write_md:
         os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
@@ -311,7 +322,7 @@ Generated {stamp} by `python bench_scaling.py --write-md`.
 **Protocol** (BASELINE.md in-sandbox evidence): identical job — read
 pre-generated transcripts parquet ({summary["rows"]:,} rows, {INPUT_FILES}
 files) → classify → registry extract (compiled-JVM
-expressions, the engine the shipped registry picks) → broadcast enrich →
+expressions, the engine the shipped registry picks) → literal-map enrich →
 route → 4 per-sink aggregates — run at `local[{n}]` and
 `local[{n4}]`, `spark.sql.shuffle.partitions` scaled with cores,
 fresh JVM per level-run, best of {args.runs} timed runs after an
@@ -351,9 +362,12 @@ pair's measured clock ratio:
 
 **Scaling efficiency = throughput_4N / (4 × throughput_N) =
 {summary["efficiency"]} raw; {summary["efficiency_clock_normalized"]}
-clock-normalized** — the gate reads the clock-normalized figure (in
-BOTH directions: a ratio < 1 deflates it, so the calibration can fail
-a run raw numbers would pass) and this run
+clock-normalized; median over all {len(pairs)} pairs
+{summary["median_efficiency_clock_normalized"]} clock-normalized** —
+the gate reads the clock-normalized figures (in BOTH directions: a
+ratio < 1 deflates them, so the calibration can fail a run raw numbers
+would pass), requires the headline pair AND the all-pairs median to
+reach 0.8, and this run
 {"meets" if summary["pass"] else "is BELOW"} the ≥ 0.8 bar.
 
 The clock calibration (a pure register loop run INSIDE each confined

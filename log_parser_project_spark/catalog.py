@@ -142,6 +142,13 @@ class Snapshot:
     staged: bool = False
 
 
+def _ancestors(leaf: str) -> list[str]:
+    """The proper prefixes of a partition path: ``a=1/b=2/c=3`` →
+    ``a=1``, ``a=1/b=2``."""
+    parts = leaf.split(os.sep)
+    return [os.sep.join(parts[:i]) for i in range(1, len(parts))]
+
+
 class SnapshotCatalog:
     """Iceberg-table semantics on plain parquet: snapshot isolation,
     time travel, append, manifest-level dynamic partition overwrite,
@@ -968,7 +975,14 @@ class SnapshotCatalog:
             # holds the subtree: masking a subtree an immutable entry
             # lacks changes no read, and per-group resume commits would
             # otherwise grow every manifest as groups² × routes.
+            # One mask per replaced subtree: a leaf under a prefix that
+            # is itself replaced (``group=1/route=x`` under ``group=1``)
+            # masks nothing the prefix does not.
             replaced = set(self._partition_leaves(abs_dir)) | set(replace_leaves or [])
+            replaced = {
+                leaf for leaf in replaced
+                if not any(anc in replaced for anc in _ancestors(leaf))
+            }
             state = [
                 e if e.get("kind")  # keys-only / DV sidecars: no subtrees
                 else {**e, "exclude": sorted(set(e["exclude"]) | {

@@ -43,7 +43,7 @@ plus ``repeats: array<array<string>>`` for repeat-group matches, which
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -54,11 +54,12 @@ from ..registry import PATTERNS, Pattern, all_groups, class_prefixes
 # 1. classify — routing-key + version derivation, all built-in expressions
 # ---------------------------------------------------------------------------
 
-def classify(
-    df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
-) -> DataFrame:
-    """Add ``pattern_class`` and ``version`` columns (JVM-side only).
-    The dispatch chain is built from the registry's ``prefix`` data."""
+def classify_columns(
+    text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
+) -> dict[str, Column]:
+    """The ``pattern_class`` and ``version`` expressions (JVM-side
+    only). The dispatch chain is built from the registry's ``prefix``
+    data."""
     dispatched = {cls for _pre, cls in class_prefixes(patterns)}
     orphans = sorted({p.pattern_class for p in patterns} - dispatched)
     if orphans:
@@ -93,9 +94,17 @@ def classify(
         ).cast("int"),
         F.lit(1),
     )
-    return df.withColumn("pattern_class", pattern_class).withColumn(
-        "version", F.when(pattern_class.isNull(), F.lit(None).cast("int")).otherwise(version)
-    )
+    return {
+        "pattern_class": pattern_class,
+        "version": F.when(pattern_class.isNull(), F.lit(None).cast("int")).otherwise(version),
+    }
+
+
+def classify(
+    df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
+) -> DataFrame:
+    """Add ``pattern_class`` and ``version`` columns (JVM-side only)."""
+    return df.withColumns(classify_columns(text_col, patterns))
 
 
 # ---------------------------------------------------------------------------
@@ -321,15 +330,15 @@ def choose_extractor(spark, patterns: tuple[Pattern, ...] = PATTERNS) -> str:
     return "pandas"
 
 
-def extract(
-    df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
-) -> DataFrame:
-    """Apply the registry with the pandas UDF; adds ``matched``, group
-    columns (under ``extracted.*``), and ``repeats``."""
+def extract_udf_columns(
+    text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
+) -> tuple[Column, dict[str, Column]]:
+    """The pandas-UDF extraction as two projections: the UDF call (to
+    be bound to ``_p``) and the ``matched``/``extracted``/``repeats``
+    expressions that read ``_p``. Splitting them keeps ONE
+    ``ArrowEvalPython`` node in the plan."""
     udf, groups_all = _make_extract_udf(patterns)
-    parsed = df.withColumn(
-        "_p", udf(F.col(text_col), F.col("pattern_class"), F.col("version"))
-    )
+    call = udf(F.col(text_col), F.col("pattern_class"), F.col("version"))
     repeats = F.when(
         F.col("_p.repeats_enc").isNotNull(),
         F.transform(
@@ -337,12 +346,20 @@ def extract(
             lambda rec: F.split(rec, _FLD_SEP),
         ),
     )
-    return (
-        parsed.withColumn("matched", F.col("_p.matched"))
-        .withColumn("extracted", F.struct(*[F.col(f"_p.{g}").alias(g) for g in groups_all]))
-        .withColumn("repeats", repeats)
-        .drop("_p")
-    )
+    return call, {
+        "matched": F.col("_p.matched"),
+        "extracted": F.struct(*[F.col(f"_p.{g}").alias(g) for g in groups_all]),
+        "repeats": repeats,
+    }
+
+
+def extract(
+    df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
+) -> DataFrame:
+    """Apply the registry with the pandas UDF; adds ``matched``, group
+    columns (under ``extracted.*``), and ``repeats``."""
+    call, cols = extract_udf_columns(text_col, patterns)
+    return df.withColumn("_p", call).withColumns(cols).drop("_p")
 
 
 def parse(
@@ -424,9 +441,9 @@ def _java_rx(regex: str) -> str:
     return "(?d)" + re.sub(r"\(\?P<\w+>", "(", regex)
 
 
-def extract_builtin(
-    df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
-) -> DataFrame:
+def extract_builtin_columns(
+    text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
+) -> dict[str, Column]:
     """Registry extraction with built-in expressions only — one
     ``regexp_extract`` per (pattern, group), dispatched by the classify
     columns. Same output contract as :func:`extract`; equivalence is
@@ -438,41 +455,45 @@ def extract_builtin(
     """
     t = F.col(text_col)
     cls, ver = F.col("pattern_class"), F.col("version")
+    # per pattern (by registry position): its Java regex, "this row is
+    # this pattern", and "… and it matches" — built once, shared by
+    # every expression below
+    java_rx = [_java_rx(p.regex) for p in patterns]
+    is_p = [(cls == p.pattern_class) & (ver == p.version) for p in patterns]
+    hit = [is_p[i] & t.rlike(java_rx[i]) for i in range(len(patterns))]
 
     matched = F.lit(False)
-    for p in patterns:
-        matched = F.when((cls == p.pattern_class) & (ver == p.version), t.rlike(_java_rx(p.regex))).otherwise(matched)
+    for i in range(len(patterns)):
+        matched = F.when(is_p[i], t.rlike(java_rx[i])).otherwise(matched)
 
     group_cols = []
     for g in all_groups(patterns):
         expr = F.lit(None).cast("string")
-        for p in patterns:
+        for i, p in enumerate(patterns):
             if g in p.groups:
                 idx = _group_index(p.regex, g)
-                expr = F.when(
-                    (cls == p.pattern_class) & (ver == p.version) & t.rlike(_java_rx(p.regex)),
-                    F.regexp_extract(t, _java_rx(p.regex), idx),
-                ).otherwise(expr)
+                expr = F.when(hit[i], F.regexp_extract(t, java_rx[i], idx)).otherwise(expr)
         group_cols.append(expr.alias(g))
 
     repeats = F.lit(None).cast("array<array<string>>")
-    for p in patterns:
+    for i, p in enumerate(patterns):
         if not p.repeat_group:
             continue
         n_fields = len(p.repeat_fields)
         parts = [
-            F.regexp_extract_all(t, F.lit(_java_rx(p.repeat_group)), i + 1) for i in range(n_fields)
+            F.regexp_extract_all(t, F.lit(_java_rx(p.repeat_group)), k + 1) for k in range(n_fields)
         ]
         zipped = F.zip_with(parts[0], parts[1], lambda a, b: F.array(a, b)) if n_fields == 2 else F.transform(parts[0], lambda a: F.array(a))
-        repeats = F.when(
-            (cls == p.pattern_class) & (ver == p.version) & t.rlike(_java_rx(p.regex)), zipped
-        ).otherwise(repeats)
+        repeats = F.when(hit[i], zipped).otherwise(repeats)
 
-    return (
-        df.withColumn("matched", matched)
-        .withColumn("extracted", F.struct(*group_cols))
-        .withColumn("repeats", repeats)
-    )
+    return {"matched": matched, "extracted": F.struct(*group_cols), "repeats": repeats}
+
+
+def extract_builtin(
+    df: DataFrame, text_col: str = "text", patterns: tuple[Pattern, ...] = PATTERNS
+) -> DataFrame:
+    """Apply :func:`extract_builtin_columns` (the all-JVM engine)."""
+    return df.withColumns(extract_builtin_columns(text_col, patterns))
 
 
 def parse_builtin(

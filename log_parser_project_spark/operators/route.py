@@ -15,19 +15,21 @@ pass over the text instead of one filtered write per sink.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..registry import PATTERNS, Pattern
 
 
-def route(df: DataFrame, patterns: tuple[Pattern, ...] = PATTERNS) -> DataFrame:
-    """Add the ``route`` column from the registry's class→sink map."""
+def route_column(patterns: tuple[Pattern, ...] = PATTERNS) -> Column:
+    """The ``route`` expression from the registry's class→sink map."""
     class_to_route = {p.pattern_class: p.route for p in patterns}
     m = F.create_map(*[F.lit(x) for kv in class_to_route.items() for x in kv])
-    return df.withColumn(
-        "route",
-        F.when(
-            F.col("pattern_class").isNull() | ~F.col("matched"), F.lit("sink_unmatched")
-        ).otherwise(m[F.col("pattern_class")]),
-    )
+    return F.when(
+        F.col("pattern_class").isNull() | ~F.col("matched"), F.lit("sink_unmatched")
+    ).otherwise(m[F.col("pattern_class")])
+
+
+def route(df: DataFrame, patterns: tuple[Pattern, ...] = PATTERNS) -> DataFrame:
+    """Add the ``route`` column from the registry's class→sink map."""
+    return df.withColumn("route", route_column(patterns))

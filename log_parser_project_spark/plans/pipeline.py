@@ -1,14 +1,16 @@
 """The flagship job: parse → enrich → route → aggregate, fanned out.
 
 This is the Spark analog of the reference's packet-decode lifecycle
-(SURVEY.md §3.3): scan → routing-key projection → broadcast registry
-lookup → vectorized field extraction → derived metrics → sink.
+(SURVEY.md §3.3): scan → routing-key projection → registry lookup →
+vectorized field extraction → derived metrics → sink.
 
 Plan shape (deliberate):
 
 * parse/enrich/route are *narrow* — one whole-stage-codegen'd pipeline
-  with a single ArrowEvalPython exchange for extraction; ~10^6 rows/s
-  per 32-core box steady-state.
+  (plus a single ArrowEvalPython exchange when the registry needs the
+  pandas extractor); ~10^6 rows/s per 32-core box steady-state. The
+  registry compiles to Column expressions ONCE per process
+  (:func:`_narrow_plan`), so a micro-batch pays only for applying them.
 * **fan-out = ONE partitioned write.** The routed fact lands once in
   ``sink_staging`` partitioned by ``(route, day)``; each logical sink
   is a partition subtree (Iceberg-style hidden partitioning). This
@@ -22,18 +24,26 @@ Plan shape (deliberate):
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import SnapshotCatalog
 from ..metrics import dump, get_safe, observed
 from ..operators.aggregate import per_sink_aggregates_onepass
-from ..operators.enrich import apply_enums, derive_metrics, enrich
-from ..operators.parse import all_groups, explode_repeats, parse_auto
-from ..operators.route import route
-from ..registry import PATTERNS, Pattern, sinks_of
+from ..operators.enrich import derive_columns, enrich_columns, enum_columns
+from ..operators.parse import (
+    all_groups,
+    choose_extractor,
+    classify_columns,
+    explode_repeats,
+    extract_builtin_columns,
+    extract_udf_columns,
+)
+from ..operators.route import route_column
+from ..registry import PATTERNS, Pattern, registry_to_json, sinks_of
 
 
 def sink_columns(patterns: tuple[Pattern, ...] = PATTERNS) -> list[str]:
@@ -98,6 +108,52 @@ def default_audit(df: DataFrame) -> list[str]:
     return [f"{n} {what}" for n, what in checks if n]
 
 
+@dataclass(frozen=True)
+class _NarrowPlan:
+    """A registry compiled to the narrow plan's Column expressions."""
+
+    jvm: object  # the py4j view the Columns were built through
+    projections: tuple[dict[str, Column], ...]  # applied in order
+    columns: tuple[str, ...]  # the final select
+
+
+# compiled narrow plans, keyed by the canonical registry JSON (a
+# Pattern with an enum_map dict is unhashable) — the analog of the
+# reference's metadata cache (icd_parser/cache.py); registries are
+# immutable, so nothing is evicted
+_NARROW: dict[str, _NarrowPlan] = {}
+
+
+def _compile_narrow(spark: SparkSession, patterns: tuple[Pattern, ...]) -> _NarrowPlan:
+    if choose_extractor(spark, patterns) == "jvm":
+        extract = (extract_builtin_columns("text", patterns),)
+    else:
+        call, cols = extract_udf_columns("text", patterns)
+        extract = ({"_p": call}, cols)
+    # enrich, enums, derived metrics and route read only columns that
+    # exist after extraction: one projection
+    finish = {**enrich_columns(), **enum_columns(patterns)}
+    if {"latency_ms", "tokens"} <= set(all_groups(patterns)):
+        finish.update(derive_columns())
+    finish["route"] = route_column(patterns)
+    return _NarrowPlan(
+        jvm=spark._jvm,
+        projections=(classify_columns("text", patterns), *extract, finish),
+        columns=tuple(sink_columns(patterns)),
+    )
+
+
+def _narrow_plan(spark: SparkSession, patterns: tuple[Pattern, ...]) -> _NarrowPlan:
+    """The cached compiled plan of ``patterns``; rebuilt when the cached
+    one was built through another py4j gateway. Threads that miss at
+    once each compile; the plans are equal, so whichever lands is right."""
+    key = json.dumps(registry_to_json(patterns), sort_keys=True)
+    plan = _NARROW.get(key)
+    if plan is None or plan.jvm is not spark._jvm:
+        plan = _NARROW[key] = _compile_narrow(spark, patterns)
+    return plan
+
+
 def build_routed(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -105,19 +161,24 @@ def build_routed(
 ) -> DataFrame:
     """The narrow portion of the plan: everything before any shuffle.
 
-    The registry picks the extraction engine (``parse.parse_auto``):
+    The registry picks the extraction engine (``parse.choose_extractor``):
     compiled built-in expressions (``jvm``) when every regex is
     portable to ``java.util.regex``, else the pandas ``str.extract``
     UDF (full Python-re semantics). Both give the same output
     (tests/test_extract_equivalence.py, tests/test_property_parse.py).
+
+    The registry is compiled once per process (:func:`_narrow_plan`);
+    a call applies the cached expressions as projections — classify;
+    extract (the UDF call and its unpacking are two on the pandas
+    engine); enrich + enums + derived metrics + route — and the final
+    select. Enrich is literal map lookups, so the plan holds no join,
+    no exchange and, on the JVM engine, no Python.
     """
-    df = parse_auto(spark, transcripts, patterns=patterns)
-    df = enrich(df, spark)
-    df = apply_enums(df, patterns)
-    if {"latency_ms", "tokens"} <= set(all_groups(patterns)):
-        df = derive_metrics(df)
-    df = route(df, patterns)
-    return df.select(*sink_columns(patterns))
+    plan = _narrow_plan(spark, patterns)
+    df = transcripts
+    for cols in plan.projections:
+        df = df.withColumns(cols)
+    return df.select(*plan.columns)
 
 
 def read_sink(catalog: SnapshotCatalog, sink: str, ts_range: tuple | None = None) -> DataFrame:

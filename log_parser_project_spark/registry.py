@@ -147,8 +147,10 @@ def by_class_version() -> dict[tuple[str, int], Pattern]:
 
 
 # --------------------------------------------------------------------------
-# Dimension tables (FIXTURES.md §2) — the enrich-join analogs of the
-# reference's logcode/enum metadata. Tiny → always broadcast.
+# Dimension tables (FIXTURES.md §2) — the enrich analogs of the
+# reference's logcode/enum metadata. Tiny and known at plan time, so
+# enrich looks them up as literal maps; dim_*_df materialize them as
+# tables (jobs/run_pipeline.py writes dim_roles / dim_tools).
 # --------------------------------------------------------------------------
 DIM_ROLES = [
     ("user", "human", 1),

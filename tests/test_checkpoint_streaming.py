@@ -82,7 +82,7 @@ def test_midgroup_crash_rerun_overwrites_partial(spark, transcripts_small, wareh
             if d.startswith("group=")
         }
         assert {x.split("/")[0] for x in e["exclude"]} <= held, e
-    assert "group=2" in state[2]["exclude"]
+    assert state[2]["exclude"] == ["group=2"]  # one mask per replaced subtree
     assert [e["exclude"] for i, e in enumerate(state) if i != 2] == [[], [], [], []]
 
 

@@ -145,3 +145,40 @@ def test_repeat_records_explode(routed, oracle):
         (c, t, pc, i, tuple(tup)) for (c, t, pc, i, tup) in oracle["repeat_records"]
     )
     assert got == want
+
+
+def test_enrichment_of_unknown_and_null_keys(spark):
+    """A role or tool the dims lack, and a null tool, enrich to null —
+    the left-join result and the oracle's dict ``.get``."""
+    import datetime as dt
+
+    ts = dt.datetime(2026, 3, 1, 12, 0, 0)
+    rows = [
+        ("c-1", 0, "user", "CALL search args={q=1}", "search", ts),      # both known
+        ("c-1", 1, "auditor", "ERROR code=7 severity=3 msg='x'", "bash", ts),  # unknown role
+        ("c-1", 2, "tool", "CALL fetch args={}", "teleporter", ts),     # unknown tool
+        ("c-1", 3, "assistant", "latency_ms=5 tokens=10", None, ts),    # null tool
+        ("c-1", 4, None, "no pattern here", "", ts),                    # null role, empty tool
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    got = {
+        r.turn_idx: (r.role_class, r.weight, r.tool_family, r.risk_level)
+        for r in build_routed(spark, df).collect()
+    }
+    assert got == {
+        0: ("human", 1, "retrieval", 1),
+        1: (None, None, "exec", 3),
+        2: ("infra", 2, None, None),
+        3: ("model", 1, None, None),
+        4: (None, None, None, None),
+    }
+    want = {
+        rec["turn_idx"]: tuple(
+            None if v is None or pd.isna(v) else v
+            for v in (rec["role_class"], rec["weight"], rec["tool_family"], rec["risk_level"])
+        )
+        for rec in run_oracle(df.toPandas())["routed"].to_dict("records")
+    }
+    assert got == want

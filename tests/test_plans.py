@@ -58,6 +58,107 @@ def test_parse_udf_evaluated_once(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_narrow_plan_has_no_join_exchange_rdd_or_python(spark):
+    """The shipped registry's narrow plan: enrich is literal map
+    lookups (no broadcast of Python-built dims, so no ExistingRDD
+    scan) and extraction is JVM expressions (no Python node)."""
+    plan = _plan(build_routed(spark, make_transcripts(spark, n_convs=20)))
+    for node in ("BroadcastExchange", "ExistingRDD", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+
+
+_BUILDERS = (
+    "choose_extractor", "classify_columns", "extract_builtin_columns",
+    "extract_udf_columns", "enrich_columns", "enum_columns",
+    "derive_columns", "route_column",
+)
+
+
+def test_registry_compiles_once(spark, monkeypatch):
+    """A second build_routed with the same registry reuses the compiled
+    expressions: no builder runs again."""
+    from log_parser_project_spark.plans import pipeline
+
+    calls = []
+    for name in _BUILDERS:
+        fn = getattr(pipeline, name)
+        monkeypatch.setattr(
+            pipeline, name, lambda *a, _fn=fn, _name=name, **k: calls.append(_name) or _fn(*a, **k)
+        )
+    monkeypatch.setattr(pipeline, "_NARROW", {})
+    tdf = make_transcripts(spark, n_convs=5)
+    first = build_routed(spark, tdf)
+    assert "classify_columns" in calls and "choose_extractor" in calls
+    n = len(calls)
+    second = build_routed(spark, tdf)
+    assert len(calls) == n
+    assert second.schema == first.schema
+    assert len(pipeline._NARROW) == 1
+
+
+def test_enum_map_change_gets_its_own_plan(spark, monkeypatch):
+    """Registries equal but for an enum_map compile separately, and each
+    plan's ``_friendly`` column uses its own map."""
+    from dataclasses import replace
+
+    from log_parser_project_spark.plans import pipeline
+    from log_parser_project_spark.registry import PATTERNS
+
+    monkeypatch.setattr(pipeline, "_NARROW", {})
+    loud = tuple(
+        replace(p, enum_map={k: v.upper() for k, v in p.enum_map.items()}) if p.enum_map else p
+        for p in PATTERNS
+    )
+    df = spark.createDataFrame(
+        [("c", 0, "tool", "ERROR code=1 severity=4 msg='m'", None)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.current_timestamp())
+    assert build_routed(spark, df).first().severity_friendly == "error"
+    assert build_routed(spark, df, patterns=loud).first().severity_friendly == "ERROR"
+    assert len(pipeline._NARROW) == 2
+    assert build_routed(spark, df).first().severity_friendly == "error"
+    assert len(pipeline._NARROW) == 2
+
+
+def test_concurrent_first_calls_share_one_plan(spark, monkeypatch):
+    """Threads racing on an empty cache all get the same output schema
+    and leave one entry."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from log_parser_project_spark.plans import pipeline
+
+    monkeypatch.setattr(pipeline, "_NARROW", {})
+    tdf = make_transcripts(spark, n_convs=5)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(build_routed, spark, tdf) for _ in range(8)]
+            schemas = [f.result(timeout=300).schema for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert all(s == schemas[0] for s in schemas)
+    assert len(pipeline._NARROW) == 1
+
+
+def test_compiled_plan_is_rebuilt_for_another_gateway(spark, monkeypatch):
+    """An entry built through another py4j gateway is never applied: it
+    is rebuilt against the session's own."""
+    import dataclasses
+
+    from log_parser_project_spark.plans import pipeline
+    from log_parser_project_spark.registry import PATTERNS
+
+    monkeypatch.setattr(pipeline, "_NARROW", {})
+    tdf = make_transcripts(spark, n_convs=5)
+    build_routed(spark, tdf)
+    (key, plan), = pipeline._NARROW.items()
+    pipeline._NARROW[key] = dataclasses.replace(plan, jvm=object())
+    build_routed(spark, tdf, patterns=PATTERNS)
+    assert pipeline._NARROW[key].jvm is spark._jvm
+
+
 def test_sink_read_prunes_partitions(spark, transcripts_small, tmp_path):
     cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
     run_pipeline(spark, transcripts_small, cat, write_repeats=False)

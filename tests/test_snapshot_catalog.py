@@ -356,6 +356,30 @@ def test_merge_partition_pruned_rewrites_only_touched_partitions(spark, cat):
     assert carried and all(e["exclude"] == ["route=b"] for e in carried)
 
 
+def test_replaced_subtree_is_masked_once(spark, cat):
+    """Re-running group 1 of a (group, route)-partitioned table masks the
+    group-1 entry by ``group=1`` alone: the ``group=1/route=…`` leaves
+    under it would mask nothing more."""
+    import pyspark.sql.functions as F
+
+    def group(g, rows):
+        return _df(spark, rows).withColumn("group", F.lit(g))
+
+    for g in (0, 1):
+        cat.write_table(
+            group(g, [(g, "a", "x"), (g, "b", "y")]), "t", mode="replace_partitions",
+            partition_by=["group", "route"], replace_leaves=[f"group={g}"],
+        )
+    snap = cat.write_table(
+        group(1, [(7, "a", "new"), (8, "c", "new")]), "t", mode="replace_partitions",
+        partition_by=["group", "route"], replace_leaves=["group=1"],
+    )
+    assert [e["exclude"] for e in snap.state] == [[], ["group=1"], []]
+    assert _vals(cat.read_table("t")) == [
+        (0, "a", "x"), (0, "b", "y"), (7, "a", "new"), (8, "c", "new")
+    ]
+
+
 def test_merge_delete_entire_partition_masks_its_leaf(spark, cat):
     """A partition whose rows are ALL deleted writes no leaf dir — the
     explicit replace_leaves mask must still hide its old rows."""
